@@ -79,21 +79,3 @@ def grouped_mode(
     domain = df.select(*keys).dropDuplicates()
     return domain.join(winners, on=keys, how="left")
 
-
-def mean_rollup_with_mode(
-    df: DataFrame,
-    keys: Sequence[str],
-    metrics: dict[str, str],
-    mode_col: str,
-    mode_alias: str,
-) -> DataFrame:
-    """A3: means of N columns + deterministic mode of one categorical,
-    in a single grouped result (ETL.py:116-123 intent).
-
-    The two aggregates share the shuffle key, so Catalyst/AQE reuses
-    the exchange where possible; the join is on the (small) group
-    domain and broadcasts under AQE.
-    """
-    means = mean_rollup(df, keys, metrics)
-    modes = grouped_mode(df, keys, mode_col, mode_alias)
-    return means.join(modes, on=list(keys), how="left")

@@ -7,18 +7,18 @@ measured 4-6x wins. But a lazy operator cannot unpersist after "the"
 consuming action (it does not know when the caller is done), and LRU
 eviction only kicks in under memory pressure while disk blocks linger,
 so cached blocks would otherwise accumulate across the many registry
-queries one session runs (parity suite, driver, bench).
+queries one session runs (parity suite, driver, plan audit).
 
 The fix is a module-level ledger: operators register every persisted
-intermediate via :func:`persisted`, and session owners (bench.py
-between queries, the pytest parity harness between cases, any user
-batch loop) call :func:`release_all` at their natural "query is done"
+intermediate via :func:`persisted`, and session owners (the plan
+audit between queries, the pytest parity harness between cases, any
+user batch loop) call :func:`release_all` at their natural "query is done"
 boundary. One place to audit, one call to clean.
 
 Concurrency: the ledger is process-global and assumes ONE in-flight
 query per process -- ``release_all()`` releases every tracked frame,
 including another thread's. That matches every session owner in this
-repo (bench, driver, parity suite are all sequential) and is safe in
+repo (plan audit, driver, parity suite are all sequential) and is safe in
 the worst case (Spark recomputes an unpersisted frame; correctness is
 never at stake), but it defeats the persist under concurrent drivers.
 Run concurrent query batches in separate processes (e.g. pytest-xdist

@@ -675,6 +675,8 @@ def dedup_components(
                 .agg(F.sum("l").alias("s"))
                 .collect()
             }
+            # None == None only on an empty graph (no groups), where
+            # "converged" is right; ANSI mode raises on overflow
             changed = 0 if sums.get(0) == sums.get(1) else 1
             for df in behind:
                 df.unpersist()

@@ -23,24 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def left_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str] | str,
-    broadcast_side: str = "auto",
-) -> DataFrame:
-    """Left equi-join with optional explicit broadcast of one side.
-
-    broadcast_side: 'auto' (let Catalyst/AQE decide), 'left', 'right'.
-    """
-    if broadcast_side == "left":
-        left = F.broadcast(left)
-    elif broadcast_side == "right":
-        right = F.broadcast(right)
-    on = [on] if isinstance(on, str) else list(on)
-    return left.join(right, on=on, how="left")
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -1550,7 +1550,7 @@ def _pq_approx_dot(adc: Column, codes: Column, m_sub: int) -> Column:
     slower than this codegen-able chain at 500k rows (m_sub = 8 keeps
     the generated method small; the SAME unroll at dim=64 measured 5x
     SLOWER than the fold -- generated-code size blows the JIT budget
-    -- so the 64-dim dot() stays a fold, see OPTIMIZATION_r12.md).
+    -- so the 64-dim dot() stays a fold).
     Value-identical: ((0.0 + t0) + t1) + ... is the fold's exact
     order, 0.0 seed included.
 

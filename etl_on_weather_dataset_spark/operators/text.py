@@ -176,13 +176,6 @@ def lang_id_sql(col_sql: str) -> str:
     return expr
 
 
-def punct_ratio(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return (
-        F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    ) / F.length(c)
-
-
 def fingerprint(text: Column | str) -> Column:
     """Exact-dup fingerprint: md5 of whitespace-normalized lowercase."""
     c = F.col(text) if isinstance(text, str) else text

@@ -84,7 +84,7 @@ register(QuerySpec(
     spark_fn=_quantile_sketch_price,
     oracle=_QUANTILE_SKETCH_ORACLE,
     covers=("mergeable-quantile-sketch", "sketch-merge-equals-rebuild"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -187,7 +187,7 @@ register(QuerySpec(
         ORDER BY week_idx
     """,
     covers=("range-join-bucketized", "interval-overlap"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -1022,7 +1022,7 @@ register(QuerySpec(
     spark_fn=_classifier_eval_auc,
     oracle=_classifier_eval_auc_oracle,
     covers=("roc-auc-exact", "classifier-eval"),
-    bench=True,  # the eval tier's headline cost
+    audit=True,  # the eval tier's headline cost
     extended=True,  # round-7 rotation (registry.py)
 ))
 
@@ -1407,7 +1407,7 @@ register(QuerySpec(
     oracle=_inference_batch_audit_oracle,
     covers=("inference-batching", "padding-waste",
             "length-bucketing"),
-    bench=True,  # window-assignment throughput headliner
+    audit=True,  # window-assignment throughput headliner
     extended=True,  # round-7 rotation (registry.py)
 ))
 
@@ -1868,7 +1868,7 @@ register(QuerySpec(
     spark_fn=_attribution_last_touch,
     oracle=_attribution_oracle,
     covers=("last-touch-attribution", "window-over-join-rewrite"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -1925,7 +1925,7 @@ register(QuerySpec(
     oracle=_fd_audit_oracle,
     covers=("functional-dependency-audit", "candidate-key-audit",
             "g3-error"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -2019,7 +2019,7 @@ register(QuerySpec(
         ORDER BY item
     """,
     covers=("heavy-hitters", "misra-gries", "mergeable-topk-sketch"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -2086,7 +2086,7 @@ register(QuerySpec(
     oracle=_cusum_events_oracle,
     covers=("cusum-changepoint", "drift-localization",
             "ordered-integer-fold"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -2151,94 +2151,6 @@ def _cusum_store_incremental(
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-# Pristine half-0 rollup store for the bench_fn, keyed by sf_dir --
-# same pattern as queries_pipeline._cs_pristine_store (round-9
-# verdict item 2): the day-1 store build is fixture cost paid once
-# per process; each timed run restores it by filesystem copy.
-_CUSUM_BENCH_CACHE: dict[str, str] = {}
-
-
-def _cusum_pristine_store(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    from ..operators.rollup_store import incremental_rollup
-
-    if sf_dir not in _CUSUM_BENCH_CACHE:
-        tmp = tempfile.mkdtemp(prefix="spark_cusum_bench_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "day", F.col("ts").cast("date")
-        )
-        incremental_rollup(
-            spark, ev.filter(F.col("day") <= F.lit("2024-01-15")),
-            f"{tmp}/daily", batch_id="half0",
-            key_cols=["day"], value_col="value",
-        )
-        _CUSUM_BENCH_CACHE[sf_dir] = f"{tmp}/daily"
-    return _CUSUM_BENCH_CACHE[sf_dir]
-
-
-def _cusum_store_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Operator-cost bench form (round-9 verdict item 2): the day-2
-    work the store-fed monitor pays daily -- ONE rollup-store merge
-    of the new batch + the |days|-grain CUSUM read off the store --
-    without the day-1 store build (restored from a per-process
-    pristine copy) and without the exactly-once replay leg, which
-    stays driver-attested via spark_fn."""
-    import shutil
-    import tempfile
-
-    from ..operators.rollup_store import incremental_rollup
-    from ..operators.timeseries import cusum_from_daily
-
-    pristine = _cusum_pristine_store(spark, sf_dir)
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.col("ts").cast("date")
-    )
-    tmp = tempfile.mkdtemp(prefix="spark_cusum_bench_run_")
-    try:
-        store = f"{tmp}/daily"
-        shutil.copytree(pristine, store)
-        agg = incremental_rollup(
-            spark, ev.filter(F.col("day") > F.lit("2024-01-15")),
-            store, batch_id="half1",
-            key_cols=["day"], value_col="value",
-        )
-        daily = agg.select(
-            "day",
-            F.col("n_rows").alias("n"),
-            (
-                F.col("sum_c")
-                + F.when(
-                    F.col("day") >= F.lit(_CUSUM_SHIFT_DAY),
-                    F.lit(_CUSUM_BOOST_CENTS) * F.col("n_rows"),
-                ).otherwise(F.lit(0))
-            ).cast("long").alias("s"),
-        )
-        [row] = (
-            cusum_from_daily(
-                daily, burn_in_days=_CUSUM_BURN_IN,
-                slack_ppm=_CUSUM_SLACK_PPM,
-            )
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_days"),
-                F.sum(F.col("alarm_pos").cast("long"))
-                .cast("long").alias("n_alarm_pos"),
-                F.sum(F.col("alarm_neg").cast("long"))
-                .cast("long").alias("n_alarm_neg"),
-            )
-            .collect()
-        )
-        vals = tuple(row)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        [vals], "n_days long, n_alarm_pos long, n_alarm_neg long"
-    )
-
-
 def _cusum_store_plans(
     spark: SparkSession, sf_dir: str
 ) -> dict[str, DataFrame]:
@@ -2276,11 +2188,7 @@ register(QuerySpec(
     oracle=_cusum_events_oracle,
     covers=("day2-drift-monitor", "rollup-store-cusum",
             "exactly-once-replay"),
-    bench=True,
-    # bench times one store merge + the store-fed monitor against a
-    # restored pristine store (r9 verdict item 2); the replay ledger
-    # and full scenario stay driver-attested via spark_fn
-    bench_fn=_cusum_store_bench,
+    audit=True,
     plan_fn=_cusum_store_plans,
 ))
 

@@ -68,7 +68,7 @@ register(QuerySpec(
         FROM c WHERE side = 1
     """,
     covers=("asof-join",),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -535,7 +535,7 @@ register(QuerySpec(
         GROUP BY o_orderstatus
     """,
     covers=("merge-upsert", "cdc"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -964,7 +964,7 @@ register(QuerySpec(
     spark_fn=_record_linkage,
     oracle=_record_linkage_oracle,
     covers=("record-linkage", "qgram-blocking", "edit-distance-verify"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -1002,7 +1002,7 @@ register(QuerySpec(
     spark_fn=_column_profile,
     oracle=_column_profile_oracle,
     covers=("column-profiling", "data-quality-stats"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -1030,7 +1030,7 @@ register(QuerySpec(
     spark_fn=_funnel,
     oracle=_funnel_oracle,
     covers=("funnel-analysis", "ordered-sequence-match"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -1052,7 +1052,7 @@ register(QuerySpec(
     spark_fn=_retention,
     oracle=_retention_oracle,
     covers=("cohort-retention", "first-seen-cohorting"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 

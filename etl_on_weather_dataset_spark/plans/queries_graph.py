@@ -190,6 +190,6 @@ register(QuerySpec(
     spark_fn=_pagerank_top,
     oracle=_pagerank_oracle,
     covers=("graph-pagerank", "iterative-fixed-point"),
-    bench=True,
+    audit=True,
     extended=True,
 ))

@@ -437,7 +437,7 @@ register(QuerySpec(
     covers=("curation-e2e", "pipeline-compose"),
     # flagship #2 gets a tracked wall-time alongside the weather
     # pipeline (round-2 verdict #8)
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -705,7 +705,7 @@ register(QuerySpec(
     spark_fn=_decontamination,
     oracle=_decontamination_oracle,
     covers=("decontamination", "benchmark-overlap"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -767,7 +767,7 @@ register(QuerySpec(
     spark_fn=_packed_bins,
     oracle=_packed_bins_oracle,
     covers=("sequence-packing", "training-bins"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -792,7 +792,7 @@ register(QuerySpec(
     spark_fn=_logprob,
     oracle=_logprob_oracle,
     covers=("lm-quality-score", "unigram-logprob"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -927,7 +927,7 @@ register(QuerySpec(
     spark_fn=_dedup_canonical,
     oracle=_dedup_canonical_oracle,
     covers=("dedup-resolution", "quality-aware-survivorship"),
-    bench=True,  # the dedup pipeline ending a user runs hourly
+    audit=True,  # the dedup pipeline ending a user runs hourly
     extended=True,  # round-8 rotation (registry.py)
 ))
 
@@ -984,7 +984,7 @@ register(QuerySpec(
     spark_fn=_boilerplate,
     oracle=_boilerplate_oracle,
     covers=("boilerplate-removal", "line-dedup"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -1037,7 +1037,7 @@ register(QuerySpec(
         fromlist=["importance_logratio_sql"],
     ).importance_logratio_sql("documents", "lang = 'en'"),
     covers=("importance-resampling", "dsir"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -1279,7 +1279,7 @@ register(QuerySpec(
     spark_fn=_span_stats,
     oracle=_span_stats_oracle,
     covers=("exact-substring-dedup", "dup-span-measurement"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -1355,7 +1355,7 @@ register(QuerySpec(
     spark_fn=_source_drift,
     oracle=_source_drift_oracle,
     covers=("distribution-drift", "kl-divergence", "slice-monitoring"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -2243,7 +2243,7 @@ register(QuerySpec(
     oracle=_neyman_allocation_oracle,
     covers=("neyman-allocation", "variance-optimal-sampling",
             "budget-exact-stratified-draw"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -2325,70 +2325,6 @@ def _component_store_incremental(
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-# Pristine day-1 component stores for the bench_fn, keyed by sf_dir:
-# built once per process (fixture cost), restored by a cheap
-# filesystem copy per timed run so the bench times the DAY-2 merge --
-# the operator a 100 TB pipeline pays daily -- not the one-shot
-# day-1 labeling it pays once (round-9 verdict item 2).
-_CS_BENCH_CACHE: dict[str, str] = {}
-
-
-def _cs_pristine_store(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    from ..operators.component_store import merge_component_batch
-
-    if sf_dir not in _CS_BENCH_CACHE:
-        tmp = tempfile.mkdtemp(prefix="spark_cstore_bench_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders")
-        merge_component_batch(
-            spark, _cs_day1_edges(orders), f"{tmp}/day1"
-        )
-        _CS_BENCH_CACHE[sf_dir] = f"{tmp}/day1"
-    return _CS_BENCH_CACHE[sf_dir]
-
-
-def _component_store_bench(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Operator-cost bench form (round-9 verdict item 2, precedent
-    ``_web_ingest_incremental_bench``): ONE day-2 merge through the
-    REAL bucket-partitioned store + the store summary -- without the
-    day-1 one-shot labeling (restored from a per-process pristine
-    copy; a filesystem copy, no Spark job) and without the
-    equals-one-shot verification, which lives in the driver oracle.
-    BENCH_r{N} therefore trends the O(batch + affected) merge the
-    pipeline pays daily; the full scenario stays driver-attested via
-    spark_fn."""
-    import shutil
-    import tempfile
-
-    from ..operators.component_store import (
-        component_store_summary,
-        merge_component_batch,
-    )
-
-    pristine = _cs_pristine_store(spark, sf_dir)
-    orders = load_table(spark, sf_dir, "orders")
-    tmp = tempfile.mkdtemp(prefix="spark_cstore_bench_run_")
-    try:
-        store = f"{tmp}/components"
-        shutil.copytree(pristine, store)
-        merge_component_batch(spark, _cs_day2_edges(orders), store)
-        [row] = component_store_summary(spark, store).collect()
-        vals = tuple(row)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        [vals],
-        "n_nodes long, n_components long, max_component long, "
-        "sum_ids long, sum_labels long",
-    )
 
 
 def _component_store_plans(
@@ -2484,11 +2420,7 @@ register(QuerySpec(
     oracle=_component_store_oracle,
     covers=("incremental-connected-components", "component-store",
             "day2-dedup-groups"),
-    bench=True,
-    # bench times the day-2 merge + summary against a restored
-    # pristine store, not the scenario's day-1 build (r9 verdict
-    # item 2); the full contract stays driver-attested via spark_fn
-    bench_fn=_component_store_bench,
+    audit=True,
     plan_fn=_component_store_plans,
 ))
 
@@ -2538,10 +2470,9 @@ def _at_valid_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "embedding")
 
 
-def _at_plan_and_run(spark: SparkSession, sf_dir: str) -> dict:
-    """Shared scenario body: plan the band shape, run the banded join
-    at the chosen r, scale semdedup's cells. Returns the raw pieces;
-    spark_fn adds the verification legs, bench_fn times this body."""
+def _autotuned_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Plan the band shape, run the banded join at the chosen r, scale
+    semdedup's cells, then verify each leg (flags by construction)."""
     from ..operators.dedup import (
         _band_keys,
         _minhash_shingles,
@@ -2589,30 +2520,15 @@ def _at_plan_and_run(spark: SparkSession, sf_dir: str) -> dict:
         valid, _AT_SEM_THRESHOLD, n_cells=cells,
         id_col="vec_id", vec_col="embedding", dim=_AT_DIM,
     )
-    return {
-        "n_docs": n_docs,
-        "budget": budget,
-        "cost": cost,
-        "chosen": chosen,
-        "collisions": collisions,
-        "n_valid": n_valid,
-        "cells": cells,
-        "sem": sem,
-    }
-
-
-def _autotuned_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _at_plan_and_run(spark, sf_dir)
-    chosen, cost = s["chosen"], s["cost"]
     # guarantee legs (engine-side verification, flags by construction)
-    n_join = s["collisions"].count()
+    n_join = collisions.count()
     plan_join_diff = abs(int(chosen.n_collision_pairs) - n_join)
     within = (
-        int(chosen.n_collision_pairs) <= s["budget"]
+        int(chosen.n_collision_pairs) <= budget
         or int(chosen.rows_per_band) == int(cost[-1].rows_per_band)
     )
     smallest = all(
-        r.n_collision_pairs > s["budget"]
+        r.n_collision_pairs > budget
         for r in cost
         if r.rows_per_band < chosen.rows_per_band
     )
@@ -2623,20 +2539,20 @@ def _autotuned_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id_a"),
         (F.col("doc_id") + 1_000_000).alias("id_b"),
     )
-    cand = s["collisions"].dropDuplicates(["id_a", "id_b"])
+    cand = collisions.dropDuplicates(["id_a", "id_b"])
     n_injected = injected.count()
     n_missed = injected.join(cand, ["id_a", "id_b"], "left_anti").count()
-    n_keep = s["sem"].filter(F.col("keep")).count()
+    n_keep = sem.filter(F.col("keep")).count()
     rows = [
-        ("n_docs", int(s["n_docs"])),
+        ("n_docs", int(n_docs)),
         ("n_injected_pairs", int(n_injected)),
         ("n_missed_injected", int(n_missed)),
         ("n_plan_join_diff", int(plan_join_diff)),
         ("band_within_budget", int(within)),
         ("band_smallest_within_budget", int(smallest)),
-        ("n_valid_vectors", int(s["n_valid"])),
-        ("n_cells_scaled", int(s["cells"])),
-        ("sem_keep_le_valid", int(n_keep <= s["n_valid"])),
+        ("n_valid_vectors", int(n_valid)),
+        ("n_cells_scaled", int(cells)),
+        ("sem_keep_le_valid", int(n_keep <= n_valid)),
     ]
     return spark.createDataFrame(rows, "stage string, n long")
 
@@ -2693,25 +2609,6 @@ def _autotuned_curation_oracle() -> str:
     """
 
 
-def _autotuned_curation_bench(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Operator-cost bench form: planning aggregates + banded join at
-    the chosen r + scaled-cell semdedup -- without the verification
-    legs (injected-pair recall, plan==join recount)."""
-    s = _at_plan_and_run(spark, sf_dir)
-    n_pairs = s["collisions"].dropDuplicates(["id_a", "id_b"]).count()
-    n_keep = s["sem"].filter(F.col("keep")).count()
-    return spark.createDataFrame(
-        [(
-            int(s["chosen"].rows_per_band), n_pairs,
-            int(s["cells"]), n_keep,
-        )],
-        "chosen_r long, n_candidate_pairs long, "
-        "n_cells long, n_sem_keep long",
-    )
-
-
 def _autotuned_curation_plans(
     spark: SparkSession, sf_dir: str
 ) -> dict[str, DataFrame]:
@@ -2766,8 +2663,7 @@ register(QuerySpec(
     oracle=_autotuned_curation_oracle,
     covers=("banding-cost-planner-composed", "density-dial-composed",
             "day2-autotuned-flagship"),
-    bench=True,
-    bench_fn=_autotuned_curation_bench,
+    audit=True,
     plan_fn=_autotuned_curation_plans,
 ))
 

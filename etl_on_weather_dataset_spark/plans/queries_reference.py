@@ -46,7 +46,7 @@ register(QuerySpec(
         GROUP BY 1
     """,
     covers=("A1", "P2"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -119,7 +119,7 @@ register(QuerySpec(
         FROM m LEFT JOIN r ON m.month = r.month AND r.rn = 1
     """,
     covers=("A3",),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -148,7 +148,7 @@ register(QuerySpec(
         GROUP BY 1
     """,
     covers=("U1",),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -299,7 +299,7 @@ register(QuerySpec(
         FROM daily LEFT JOIN details ON daily.date = details.date
     """,
     covers=("J1",),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -487,7 +487,7 @@ register(QuerySpec(
         ) WHERE rn <= 3
     """,
     covers=("window", "top-k"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -660,7 +660,7 @@ register(QuerySpec(
         GROUP BY user_id, session_id
     """,
     covers=("sessionization", "window-lag"),
-    bench=True,
+    audit=True,
 ))
 
 

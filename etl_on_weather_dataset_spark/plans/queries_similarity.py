@@ -35,7 +35,7 @@ register(QuerySpec(
     spark_fn=_brute_topk,
     oracle=cosine_topk_sql(k=_K, query_filter=f"id < {_N_QUERIES}"),
     covers=("similarity-bruteforce", "array-fns"),
-    bench=True,
+    audit=True,
     # exact baseline; the serving shape at corpus scale is the
     # IVF-PQ shortlist + exact rerank
     scale_path="cosine_topk_ivf_pq",
@@ -221,16 +221,6 @@ def _multi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                           broadcast_queries=True)
 
 
-def _multi_topk_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # bench the recall-relevant shape: the 200-query eval set
-    from ..operators.similarity import lsh_topk_multi
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _RECALL_QUERIES)
-    return lsh_topk_multi(queries, emb, k=_K, n_tables=_MT_TABLES,
-                          broadcast_queries=True)
-
-
 def _multi_topk_oracle() -> str:
     from ..operators.similarity import lsh_topk_multi_sql
 
@@ -244,8 +234,7 @@ register(QuerySpec(
     spark_fn=_multi_topk,
     oracle=_multi_topk_oracle,
     covers=("similarity-lsh-multi", "ann-or-amplified"),
-    bench=True,
-    bench_fn=_multi_topk_bench,
+    audit=True,
     extended=True,  # rotated into the round-4 driver window
 ))
 
@@ -532,7 +521,7 @@ register(QuerySpec(
     spark_fn=_semdedup,
     oracle=_semdedup_oracle,
     covers=("semantic-dedup", "semdedup", "embedding-clusters"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -896,32 +885,12 @@ def _pq_topk_oracle() -> str:
     return ivf_pq_topk_sql(k=_K, n_probe=_PQ_PROBES, rerank=32)
 
 
-def _pq_topk_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving-shape bench form (round-8 verdict items 4/6): the same
-    every-row-as-query IVF-PQ, but with the corpus-size-scaled cell
-    count (scaled_n_cells, target 64 rows/cell -- the density dial)
-    and FIXED n_probe, the faiss deployment recipe: nlist grows with
-    the corpus, nprobe stays put, so candidates per query stay
-    ~n_probe x target_cell_rows = constant and total cost is linear
-    in N instead of quadratic (dial_smoke.py: 9.2x -> 1.6x at 10x).
-    The driver-attested spark_fn keeps the pinned worst case; BENCH
-    trends what a serving deployment pays."""
-    from ..operators.similarity import ivf_pq_topk, scaled_n_cells
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cells = scaled_n_cells(emb.count(), target_cell_rows=64)
-    return ivf_pq_topk(
-        emb, k=_K, n_probe=_PQ_PROBES, rerank=32, n_cells=cells
-    )
-
-
 register(QuerySpec(
     name="cosine_topk_ivf_pq",
     spark_fn=_pq_topk,
     oracle=_pq_topk_oracle,
     covers=("ivf-pq", "adc", "ann-serving-index"),
-    bench=True,
-    bench_fn=_pq_topk_bench,
+    audit=True,
     extended=True,
 ))
 
@@ -1033,7 +1002,7 @@ register(QuerySpec(
     spark_fn=_kmeans_stats,
     oracle=_kmeans_oracle,
     covers=("kmeans", "lloyd-iterations", "exact-aggregation"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -1166,7 +1135,7 @@ register(QuerySpec(
     spark_fn=_embed_pipeline,
     oracle=_embed_pipeline_oracle,
     covers=("embedding-curation-pipeline", "composed-flagship"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -1221,7 +1190,7 @@ register(QuerySpec(
     spark_fn=_hybrid_rrf,
     oracle=_hybrid_rrf_oracle,
     covers=("hybrid-retrieval", "reciprocal-rank-fusion"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 

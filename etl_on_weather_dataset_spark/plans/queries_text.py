@@ -48,7 +48,7 @@ register(QuerySpec(
         GROUP BY 1
     """,
     covers=("dedup-exact",),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -75,7 +75,7 @@ register(QuerySpec(
         )
     """,
     covers=("dedup-near", "inverted-index-join"),
-    bench=True,
+    audit=True,
     # the inverted-index join is superlinear on bounded-vocabulary
     # corpora (SCALE.md smoke); the 100 TB near-dup path is banded
     # minhash over the same shingle unit
@@ -124,15 +124,6 @@ def _simhash_guarantees(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the usable near-dup detector (bench + pytest surface): banded
-    # candidates verified at Hamming <= 3 against the full fingerprint
-    # (recall is total at <= n_bands-1 by pigeonhole)
-    docs = load_table(spark, sf_dir, "documents")
-    return simhash_band_pairs(docs, "text", "doc_id", n_bands=4,
-                              max_hamming=3)
-
-
 register(QuerySpec(
     name="dedup_simhash_bands",
     spark_fn=_simhash_guarantees,
@@ -143,8 +134,7 @@ register(QuerySpec(
         FROM documents WHERE doc_id % 2 = 0
     """,
     covers=("dedup-simhash",),
-    bench=True,
-    bench_fn=_simhash_pairs,
+    audit=True,
 ))
 
 
@@ -173,18 +163,6 @@ register(QuerySpec(
 # not in the driver row.
 
 _MH_T = 0.2          # shingle-Jaccard near-dup bar (= dedup_ngram_jaccard)
-
-
-def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Uncapped: minhash over 3-word SHINGLES (not unigrams) keeps the
-    # banded candidate set sub-quadratic even on this tiny-vocabulary
-    # corpus (see operator docstring). distance 0.8 = shingle-Jaccard
-    # >= 0.2, the same near-dup bar as dedup_ngram_jaccard -- the two
-    # tiers are directly comparable: this one replaces the exact
-    # tier's inverted-index join with a constant-width signature join.
-    docs = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(docs, "text", "doc_id",
-                             max_distance=1.0 - _MH_T)
 
 
 def _minhash_guarantees(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,8 +221,7 @@ register(QuerySpec(
         CAST(0 AS BIGINT) AS n_missed_injected_pairs
     """,
     covers=("dedup-minhash-lsh",),
-    bench=True,
-    bench_fn=_minhash_pairs,
+    audit=True,
 ))
 
 
@@ -512,7 +489,7 @@ register(QuerySpec(
         GROUP BY lang
     """,
     covers=("text-quality", "token-count"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -604,7 +581,7 @@ register(QuerySpec(
         )
     """,
     covers=("chunking", "udtf-like-explode"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -662,7 +639,7 @@ register(QuerySpec(
     spark_fn=_bm25,
     oracle=_bm25_oracle,
     covers=("bm25-retrieval", "lexical-topk"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 
@@ -692,7 +669,7 @@ register(QuerySpec(
     spark_fn=_hashed_classifier,
     oracle=_hashed_classifier_oracle,
     covers=("quality-classifier", "hashing-trick-scoring"),
-    bench=True,
+    audit=True,
     extended=True,
 ))
 

@@ -2,8 +2,8 @@
 
 The reference has exactly one join (J1); these queries extend the
 engine to the join/agg surface any analytics user needs (multi-way
-joins, semi/anti joins, rollup, pivot, global top-k) and are the bench
-headliners at sf0.1.
+joins, semi/anti joins, rollup, pivot, global top-k) and lead the
+plan audit (PLANS.md).
 
 Scale notes:
 - spec-bounded dims (region: 5 rows, nation: 25) carry an explicit
@@ -79,7 +79,7 @@ register(QuerySpec(
         GROUP BY l_returnflag, l_linestatus
     """,
     covers=("A1", "F1", "agg-multi"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -119,7 +119,7 @@ register(QuerySpec(
           AND l_quantity < 24
     """,
     covers=("scan-agg", "pushdown"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -184,7 +184,7 @@ register(QuerySpec(
         ) WHERE rk <= 10
     """,
     covers=("J-multi", "top-k", "sort-limit"),
-    bench=True,
+    audit=True,
 ))
 
 
@@ -236,7 +236,7 @@ register(QuerySpec(
         GROUP BY r_name, n_name
     """,
     covers=("J-multi", "broadcast-join"),
-    bench=True,
+    audit=True,
 ))
 
 

@@ -61,7 +61,7 @@ register(QuerySpec(
     spark_fn=_preference_pairs,
     oracle=_preference_pairs_oracle,
     covers=("preference-pairs", "rlhf-data", "argmax-argmin-agg"),
-    bench=True,  # one aggregate over the fact table: a good trend line
+    audit=True,  # one aggregate over the fact table
 ))
 
 # --- epoch_shuffle_manifest: deterministic data-loader order -------------------

@@ -103,7 +103,7 @@ register(QuerySpec(
     oracle=_url_domain_curation_oracle,
     covers=("url-canonicalization", "registered-domain",
             "per-domain-cap", "blocklist-filter", "web-dedup-key"),
-    bench=True,  # string-codegen throughput headliner
+    audit=True,  # string-codegen throughput headliner
     extended=True,  # round-7 rotation (registry.py)
 ))
 
@@ -531,7 +531,7 @@ def _wi_batches(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """The two deterministic crawl days (shared by the contract
-    query, its operator-cost bench form, and the plan provider)."""
+    query and the plan provider)."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_URL_SYNTH).alias("url"),
         F.expr(_HTML_SYNTH).alias("html"),
@@ -651,48 +651,6 @@ def _web_ingest_incremental(
         "n_raw_d2 long, n_landed_d2 long, n_quality_d2 long, "
         "n_oneshot long, n_fp_mismatch long, "
         "rollup_version long, n_domains long, n_rollup_mismatch long",
-    )
-
-
-def _web_ingest_incremental_bench(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Operator-cost bench form (round-8 verdict item 3): the work a
-    daily crawl actually pays -- two landings through the REAL
-    fingerprint store (probe + land + append) and two rollup-store
-    merges -- WITHOUT the incremental==one-shot verification joins
-    and the six per-stage contract counts. BENCH_r{N} therefore
-    trends the operator, not the attestation harness; the full
-    contract stays driver-attested via spark_fn."""
-    import shutil
-    import tempfile
-
-    from ..operators.dedup import incremental_exact_dedup
-    from ..operators.rollup_store import incremental_rollup, read_rollup
-
-    day1, day2 = _wi_batches(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="spark_web_bench_")
-    try:
-        fp_store = f"{tmp}/fp_store"
-        roll_store = f"{tmp}/rollup"
-        n_landed = {}
-        for day, batch in (("d1", day1), ("d2", day2)):
-            landed = incremental_exact_dedup(
-                spark, _wi_enrich(batch), fp_store, f"{tmp}/out_{day}",
-                text_col="canonical",
-            )
-            incremental_rollup(
-                spark, _wi_quality(landed), roll_store, batch_id=day,
-                key_cols=["domain"], value_col="n_tokens",
-                value_scale=1,
-            )
-            n_landed[day] = landed.count()
-        _, _, version = read_rollup(spark, roll_store)
-        row = (n_landed["d1"], n_landed["d2"], version)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        [row], "n_landed_d1 long, n_landed_d2 long, rollup_version long"
     )
 
 
@@ -847,10 +805,8 @@ register(QuerySpec(
     covers=("day2-incremental-curation", "fingerprint-store",
             "rollup-store", "incremental-equals-oneshot",
             "crawl-recrawl-dedup"),
-    bench=True,  # THE daily-cadence shape a 100 TB crawl runs
-    # bench times the OPERATOR (probe + land + merge), not the
-    # contract's verification joins and six stage counts; the plan
-    # audit explains the scenario's inner plans (r8 verdict item 3)
-    bench_fn=_web_ingest_incremental_bench,
+    audit=True,  # THE daily-cadence shape a 100 TB crawl runs
+    # the plan audit explains the scenario's inner plans (r8 verdict
+    # item 3)
     plan_fn=_web_ingest_incremental_plans,
 ))

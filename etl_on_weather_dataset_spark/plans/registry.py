@@ -48,17 +48,12 @@ class QuerySpec:
     oracle: str | Callable[[], str] | None
     # Which SURVEY.md par.2 operator(s) this query covers (for the judge).
     covers: tuple[str, ...] = field(default=())
-    # Headline queries also run in bench.py at sf0.1.
-    bench: bool = False
+    # Headline queries whose physical plans tools/plan_audit.py audits
+    # (PLANS.md, tests/test_scale_patterns.py TestBenchPlansNoCartesian).
+    audit: bool = False
     # Extended queries are pytest-only (oracle-checked locally) and not
     # shown to the driver, keeping the driver registry <= DRIVER_CAP.
     extended: bool = False
-    # Optional bench-time override: when the driver-facing spark_fn
-    # wraps the operator in an oracle-friendly contract (e.g. the
-    # guarantee-flag form of dedup_minhash_lsh, which also runs the
-    # exact tier to diff against), bench_fn times the OPERATOR itself
-    # so BENCH trend lines measure engine cost, not contract cost.
-    bench_fn: SparkQuery | None = None
     # Optional plan-audit override for SCENARIO queries (store-backed
     # contract queries whose spark_fn executes inner jobs and returns
     # a one-row summary -- the audit would otherwise see only a
@@ -409,16 +404,7 @@ def all_oracle_sql() -> dict[str, str]:
     }
 
 
-def bench_queries() -> dict[str, SparkQuery]:
+def audit_specs() -> dict[str, QuerySpec]:
+    """Full specs of the plan-audit queries (the audit needs plan_fn)."""
     _load_all()
-    return {
-        n: (s.bench_fn or s.spark_fn)
-        for n, s in REGISTRY.items()
-        if s.bench
-    }
-
-
-def bench_specs() -> dict[str, QuerySpec]:
-    """Full specs of the bench queries (plan audit needs plan_fn)."""
-    _load_all()
-    return {n: s for n, s in REGISTRY.items() if s.bench}
+    return {n: s for n, s in REGISTRY.items() if s.audit}

@@ -28,7 +28,7 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     ``master``/``shuffle_partitions`` default from env
-    (``SPARK_GRAFT_CPUS``) so tests, bench.py and the driver share one
+    (``SPARK_GRAFT_CPUS``) so tests, tools and the driver share one
     code path.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))

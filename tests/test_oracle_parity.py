@@ -77,7 +77,7 @@ def test_rotation_leaves_no_query_unattested_and_unplanned():
 # pytest window cannot fit a full sweep -- that sweep duplicates the
 # driver's own CORRECTNESS gate and tools/driver_sim.py, which remain
 # the authoritative full-registry checks).
-PARITY_SMOKE = [n for n in (
+PARITY_SMOKE = [
     "pricing_summary",            # TPC-H aggregate
     "regional_revenue",           # TPC-H join chain
     "sessionize_users",           # session window
@@ -88,7 +88,14 @@ PARITY_SMOKE = [n for n in (
     "km_hazard_daily",            # survival analytics
     "tfidf_top_terms",            # text/retrieval
     "streaming_interval_join",    # streaming twin
-) if n in ORACLES]
+]
+
+
+def test_parity_smoke_resolves():
+    """A renamed or oracle-less smoke query must fail here, not drop
+    out of the smoke set unnoticed."""
+    missing = [n for n in PARITY_SMOKE if n not in ORACLES]
+    assert not missing, missing
 
 
 @pytest.mark.parametrize("name", PARITY_SMOKE)
@@ -227,27 +234,23 @@ def test_scale_path_pointers_resolve():
         assert target != name
 
 
-def test_bench_fn_and_plan_fn_specs_are_consistent():
-    """bench_fn / plan_fn only make sense on benched queries: a
-    bench_fn on a non-bench spec would silently never run, and a
-    plan_fn is the audit view OF a bench entry (round-8 verdict
-    item 3). Also pins that the two scenario mechanisms exist --
-    losing them would quietly revert PLANS.md to zero rows."""
+def test_plan_fn_specs_are_audited():
+    """A plan_fn is the audit view OF an audited query (round-8
+    verdict item 3): on a spec with audit=False it would silently never
+    run. Also pins that the scenario mechanism exists -- losing it
+    would quietly revert PLANS.md to zero rows for store scenarios."""
     from etl_on_weather_dataset_spark.plans import registry
 
     registry._load_all()
     for n, s in registry.REGISTRY.items():
-        if s.bench_fn is not None or s.plan_fn is not None:
-            assert s.bench, (
-                f"{n} has bench_fn/plan_fn but bench=False -- "
+        if s.plan_fn is not None:
+            assert s.audit, (
+                f"{n} has plan_fn but audit=False -- "
                 "the override would never run"
             )
     assert any(
         s.plan_fn is not None for s in registry.REGISTRY.values()
     ), "no scenario query exposes inner plans to the audit"
-    assert any(
-        s.bench_fn is not None for s in registry.REGISTRY.values()
-    ), "no bench entry separates operator cost from contract cost"
 
 
 def test_rotation_exposes_every_never_attested_query():

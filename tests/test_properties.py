@@ -11,13 +11,13 @@ from __future__ import annotations
 
 import pytest
 from hypothesis import HealthCheck, given, settings
-
-pytestmark = pytest.mark.slow
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from etl_on_weather_dataset_spark.operators.agg import grouped_mode, mean_rollup
 from etl_on_weather_dataset_spark.operators.clean import dedup_exact
+
+pytestmark = pytest.mark.slow
 
 SETTINGS = settings(
     max_examples=8,

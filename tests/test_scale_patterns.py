@@ -832,7 +832,7 @@ class TestBenchPlansNoCartesian:
             release_all,
         )
         from etl_on_weather_dataset_spark.plans.registry import (
-            bench_specs,
+            audit_specs,
         )
 
         mode = (
@@ -841,7 +841,7 @@ class TestBenchPlansNoCartesian:
         )
         sf = "/root/testdata/sf0.001"
         offenders, audited = [], 0
-        for name, spec in sorted(bench_specs().items()):
+        for name, spec in sorted(audit_specs().items()):
             try:
                 if spec.plan_fn is not None:
                     # scenario query: audit the UNEXECUTED inner
@@ -849,8 +849,7 @@ class TestBenchPlansNoCartesian:
                     # summary frame (round-8 verdict item 3)
                     dfs = spec.plan_fn(spark, sf).items()
                 else:
-                    dfs = [(name, (spec.bench_fn or spec.spark_fn)(
-                        spark, sf))]
+                    dfs = [(name, spec.spark_fn(spark, sf))]
                 plans = [
                     (lbl, df._jdf.queryExecution().explainString(mode))
                     for lbl, df in dfs

@@ -66,8 +66,8 @@ def main() -> None:
         ("ivf_topk_all",
          lambda df, c: ivf_topk(df, k=5, n_cells=c, n_probe=2).count(),
          16),
-        # the cosine_topk_ivf_pq bench_fn serving shape: scaled cells,
-        # fixed probes, rerank 32 -- pinned 16 is the attested constant
+        # the IVF-PQ serving shape: scaled cells, fixed probes,
+        # rerank 32 -- pinned 16 is the cosine_topk_ivf_pq constant
         ("ivf_pq_all",
          lambda df, c: ivf_pq_topk(
              df, k=5, n_cells=c, n_probe=2, rerank=32).count(),
