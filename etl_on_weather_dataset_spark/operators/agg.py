@@ -3,19 +3,16 @@ grouped mode (A2).
 
 Deterministic mode (SURVEY.md par.2a A2): the reference's
 `x.mode().iloc[0]` (ETL.py:76-77) ignores nulls and breaks frequency
-ties by the smallest value. Spark >=3.4 has `mode()` but it is
-non-deterministic on ties, so we rewrite as:
+ties by the smallest value. Spark's `mode(col, deterministic=True)`
+has exactly that contract: nulls are not counted, ties go to the
+lowest value, and a group whose values are all null still appears,
+with a null mode. So the mode is one more aggregate column beside the
+means -- A3's monthly means and mode share a single `groupBy`.
 
-    count per (keys, value)  ->  row_number() over
-        (partition by keys order by count desc, value asc)  ->  = 1
-
-All-null groups must still appear (with a null mode), so the winners
-are left-joined back onto the full key domain.
-
-Scale notes: both steps shuffle on the group keys. The count
-aggregation gets map-side partial aggregation for free; the window is
-over the (keys, value) count table, which is tiny relative to the
-input (cardinality of the key-value domain, not row count).
+Scale notes: one key exchange per rollup. The mode's per-group buffer
+is a (value -> count) map whose size is the group's value domain, not
+its row count, and it is merged map-side before the exchange like the
+sums are.
 """
 
 from __future__ import annotations
@@ -31,6 +28,7 @@ def mean_rollup(
     keys: Sequence[str],
     metrics: dict[str, str],
     scale: int | None = None,
+    modes: dict[str, str] | None = None,
 ) -> DataFrame:
     """group by ``keys``; mean of each metric col -> alias (A1/A3).
 
@@ -40,6 +38,10 @@ def mean_rollup(
     the result is bit-identical regardless of partitioning -- required
     for hash parity with a sequential oracle, and immune to float
     drift across retries at scale.
+
+    ``modes`` maps input column -> output alias of a deterministic
+    mode (:func:`grouped_mode` semantics) computed in the same
+    aggregate.
     """
     if scale is None:
         aggs = [F.avg(c).alias(a) for c, a in metrics.items()]
@@ -47,6 +49,10 @@ def mean_rollup(
         from ..functions.exact import exact_avg
 
         aggs = [exact_avg(c, scale).alias(a) for c, a in metrics.items()]
+    aggs += [
+        F.mode(c, deterministic=True).alias(a)
+        for c, a in (modes or {}).items()
+    ]
     return df.groupBy(*keys).agg(*aggs)
 
 
@@ -58,24 +64,10 @@ def grouped_mode(
 ) -> DataFrame:
     """Deterministic most-frequent value per group (A2).
 
-    Nulls excluded from counting (pandas mode semantics); a group whose
-    values are all null yields one row with a null mode.
+    Nulls excluded from counting (pandas mode semantics), frequency
+    ties broken by the smallest value; a group whose values are all
+    null yields one row with a null mode.
     """
-    keys = list(keys)
-    counts = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(*keys, value_col)
-        .agg(F.count(F.lit(1)).alias("__cnt"))
+    return df.groupBy(*keys).agg(
+        F.mode(value_col, deterministic=True).alias(output_col)
     )
-    # argmin over (-count, value) = max count, ties -> smallest value.
-    # A single min_by aggregate replaces the row_number window: one
-    # hash-agg instead of a sort, and the partial aggregation runs
-    # map-side before the key exchange.
-    winners = counts.groupBy(*keys).agg(
-        F.min_by(
-            value_col, F.struct((-F.col("__cnt")).alias("nc"), F.col(value_col))
-        ).alias(output_col)
-    )
-    domain = df.select(*keys).dropDuplicates()
-    return domain.join(winners, on=keys, how="left")
-

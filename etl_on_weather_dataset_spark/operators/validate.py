@@ -17,7 +17,6 @@ exactly one extra scan (or zero, if attached to another action via
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -81,21 +80,7 @@ def check(
     return the (all-zero) counts. One aggregate job; plus one tiny
     filtered-sample job per FAILED check only."""
     row = violation_counts(df, expectations).first()
-    failures = {e.name: row[e.name] for e in expectations if (row[e.name] or 0) > 0}
-    if not failures:
-        return {e.name: 0 for e in expectations}
-    samples: dict[str, list] = {}
-    if sample_rows > 0:
-        by_name = {e.name: e for e in expectations}
-        for name in failures:
-            e = by_name[name]
-            bad = (
-                df.filter(~F.coalesce(e.predicate, F.lit(False)))
-                .limit(sample_rows)
-                .collect()
-            )
-            samples[name] = [r.asDict() for r in bad]
-    raise ValidationError(failures, samples)
+    return _gate(df, expectations, row.asDict(), sample_rows)
 
 
 def observed(
@@ -103,16 +88,49 @@ def observed(
 ) -> tuple[DataFrame, Observation]:
     """Zero-extra-scan variant: attach violation counters to the plan
     via `df.observe`; metrics materialize with the caller's own action
-    (e.g. the sink write). Caller asserts on `observation.get` after."""
+    (e.g. the sink write). Caller gates on :func:`assert_observation`
+    after that action."""
     obs = Observation(name)
     return df.observe(obs, *[e.violation_count() for e in expectations]), obs
 
 
-def assert_observation(obs: Observation, timeout: Optional[float] = None) -> None:
-    metrics = obs.get
-    failures = {k: v for k, v in metrics.items() if (v or 0) > 0}
-    if failures:
-        raise ValidationError(failures, {})
+def assert_observation(
+    obs: Observation,
+    df: DataFrame,
+    expectations: list[Expectation],
+    sample_rows: int = 5,
+) -> dict[str, int]:
+    """:func:`check` for counts an :func:`observed` plan already
+    produced: no aggregate job of its own. ``df`` is the frame before
+    ``observe``; it is queried for offender samples only on failure."""
+    return _gate(df, expectations, obs.get, sample_rows)
+
+
+def _gate(
+    df: DataFrame,
+    expectations: list[Expectation],
+    counts: dict,
+    sample_rows: int,
+) -> dict[str, int]:
+    """The one failure path of :func:`check` and
+    :func:`assert_observation`: all-zero counts are returned (a null
+    count -- no rows -- reads 0); any violation raises ValidationError
+    with up to ``sample_rows`` offending rows per failed check."""
+    counts = {e.name: int(counts[e.name] or 0) for e in expectations}
+    failures = {name: n for name, n in counts.items() if n > 0}
+    if not failures:
+        return counts
+    samples: dict[str, list] = {}
+    if sample_rows > 0:
+        for e in expectations:
+            if e.name in failures:
+                bad = (
+                    df.filter(~F.coalesce(e.predicate, F.lit(False)))
+                    .limit(sample_rows)
+                    .collect()
+                )
+                samples[e.name] = [r.asDict() for r in bad]
+    raise ValidationError(failures, samples)
 
 
 def row_violations(expectations: list[Expectation]) -> Column:

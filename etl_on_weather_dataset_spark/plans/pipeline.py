@@ -7,36 +7,43 @@ Reference mapping (SURVEY.md par.3):
   and CSV round-trips between tasks (ETL.py:126-129,147-148,209-210)
   disappear -- Catalyst carries lineage.
 - validate raising aborts before load (trigger_rule='all_success',
-  ETL.py:283) becomes a fail-fast `check()` between transform and the
-  sink writes.
+  ETL.py:283) becomes validation that rides on the sink writes: the
+  expectations are observed counters on the write plans, the sinks
+  land in a staging directory, and they are renamed into place only
+  when every count is 0.
 - The shared cleaned fact table feeds three branches (daily agg,
   monthly agg, wind-strength details); in eager pandas that reuse is
   free, in lazy Spark we `cache()` it for the duration of the run
   (SURVEY.md par.4 "common subplan reuse").
 
-Scale notes: outputs partitioned by month; validation is ONE aggregate
-pass; the only Python anywhere is the driver-side composition -- every
-expression is codegen'd.
+Scale notes: outputs partitioned by month; validation costs no pass of
+its own (the writes evaluate it) and publishing is metadata-only
+renames; the only Python anywhere is the driver-side composition --
+every expression is codegen'd.
 """
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.agg import grouped_mode, mean_rollup
+from ..operators.agg import mean_rollup
 from ..operators.clean import coerce_timestamp, dedup_exact, impute_median
 from ..operators.derive import with_date_parts, with_wind_strength
 from ..operators.joins import fanout_join_daily
 from ..operators.validate import (
     Expectation,
+    assert_observation,
     at_least,
     check,
     in_range,
     not_null,
+    observed,
 )
+from ..operators.versioned import fs_for
 from ..schemas import WEATHER_CRITICAL_COLS, WEATHER_RAW_SCHEMA
 from ..sources.io import read_csv, write_parquet
 
@@ -122,7 +129,8 @@ def transform(df: DataFrame) -> WeatherPipelineResult:
     )
 
     # A3 (+A2 folded in, ETL.py:116-123): monthly means + precip mode
-    monthly_means = mean_rollup(
+    # in one aggregate
+    monthly = mean_rollup(
         df,
         ["month"],
         {
@@ -132,9 +140,8 @@ def transform(df: DataFrame) -> WeatherPipelineResult:
             "Pressure (millibars)": "avg_pressure_millibars",
         },
         scale=1000,
+        modes={"Precip Type": "mode_precip_type"},
     )
-    monthly_mode = grouped_mode(df, ["month"], "Precip Type", "mode_precip_type")
-    monthly = monthly_means.join(monthly_mode, "month", "left")
 
     return WeatherPipelineResult(daily=daily, monthly=monthly, _cached=df)
 
@@ -187,28 +194,69 @@ def run(
 ) -> WeatherPipelineResult:
     """extract -> transform -> validate -> load.
 
-    Validation failure raises ValidationError BEFORE any sink write
-    (the reference's all_success trigger rule). With ``output_dir``
-    set, writes daily_weather/monthly_weather parquet (partitioned by
-    month -- the 100 TB pruning key); otherwise returns the DataFrames.
+    Nothing loads unless every check passes (the reference's
+    all_success trigger rule). With ``output_dir`` set, the sink writes
+    are the validation pass: daily_weather (partitioned by month -- the
+    100 TB pruning key) and monthly_weather are written, with the
+    expectations observed on their plans, into a staging directory
+    beside ``output_dir``. Only when every count is 0 are they renamed
+    to ``output_dir/daily_weather`` and ``output_dir/monthly_weather``;
+    otherwise the staging directory is deleted, a sink published by an
+    earlier run stays as it was, and ValidationError is raised.
+    ``fail_fast=False`` writes and publishes without checks. Without
+    ``output_dir`` there is no write to observe: a fail-fast
+    ``check()`` per output gates the returned DataFrames.
     """
     raw = extract(spark, csv_path)
     result = transform(raw)
     daily_out = reshape_daily(result.daily)
     monthly_out = reshape_monthly(result.monthly)
+    sinks = [
+        ("daily_weather", daily_out, daily_expectations(), ["month"]),
+        ("monthly_weather", monthly_out, monthly_expectations(), None),
+    ]
 
     validation: dict[str, int] = {}
-    if fail_fast:
-        validation.update(check(daily_out, daily_expectations()))
-        validation.update(check(monthly_out, monthly_expectations()))
-
-    if output_dir is not None:
-        write_parquet(
-            daily_out, f"{output_dir}/daily_weather", partition_by=["month"]
+    if output_dir is None:
+        if fail_fast:
+            for _, out, expectations, _ in sinks:
+                validation.update(check(out, expectations))
+        return WeatherPipelineResult(
+            daily=daily_out, monthly=monthly_out, validation=validation
         )
-        write_parquet(monthly_out, f"{output_dir}/monthly_weather")
-        # sinks are materialized -- release the cached fact table so a
-        # long-lived session doesn't accumulate block-manager memory
+
+    fs, dest, jvm = fs_for(spark, output_dir)
+    hpath = jvm.org.apache.hadoop.fs.Path
+    dest = fs.makeQualified(dest)
+    # a sibling, so publishing is a same-filesystem rename; the _
+    # prefix hides it from parquet discovery while it exists
+    stage = hpath(
+        dest.getParent(), f"_{dest.getName()}.staging-{uuid.uuid4().hex}"
+    )
+    try:
+        gates = []
+        for name, out, expectations, partition_by in sinks:
+            written = out
+            if fail_fast:
+                written, obs = observed(out, expectations, name)
+                gates.append((obs, out, expectations))
+            write_parquet(
+                written, hpath(stage, name).toString(),
+                partition_by=partition_by,
+            )
+        for obs, out, expectations in gates:
+            validation.update(assert_observation(obs, out, expectations))
+        fs.mkdirs(dest)
+        for name, *_ in sinks:
+            target = hpath(dest, name)
+            fs.delete(target, True)
+            if not fs.rename(hpath(stage, name), target):
+                raise OSError(f"could not publish {name} to {target}")
+    finally:
+        fs.delete(stage, True)
+        # sinks are materialized (or abandoned) -- release the cached
+        # fact table so a long-lived session doesn't accumulate
+        # block-manager memory
         if result._cached is not None:
             result._cached.unpersist()
 

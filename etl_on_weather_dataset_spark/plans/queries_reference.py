@@ -87,12 +87,11 @@ register(QuerySpec(
 
 def _monthly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = with_date_parts(load_table(spark, sf_dir, "events"), "ts")
-    means = ev.groupBy("month").agg(
+    return ev.groupBy("month").agg(
         exact_avg("value").alias("avg_value"),
         F.count(F.lit(1)).alias("n_events"),
+        F.mode("event_type", deterministic=True).alias("mode_event_type"),
     )
-    modes = grouped_mode(ev, ["month"], "event_type", "mode_event_type")
-    return means.join(modes, "month", "left")
 
 
 register(QuerySpec(

@@ -25,6 +25,7 @@ from etl_on_weather_dataset_spark.operators.derive import (
 )
 from etl_on_weather_dataset_spark.operators.validate import (
     ValidationError,
+    assert_observation,
     at_least,
     check,
     in_range,
@@ -165,9 +166,24 @@ class TestValidation:
 
     def test_observed_zero_extra_scan(self, spark):
         df = spark.createDataFrame([(5.0,), (-1.0,)], "x double")
-        out, obs = observed(df, [at_least("x", 0)])
+        exps = [at_least("x", 0)]
+        out, obs = observed(df, exps)
         out.count()  # the caller's own action materializes metrics
         assert obs.get["at_least:x"] == 1
+        with pytest.raises(ValidationError) as ei:
+            assert_observation(obs, df, exps)
+        assert ei.value.failures == {"at_least:x": 1}
+        assert ei.value.samples == {"at_least:x": [{"x": -1.0}]}
+
+    def test_observed_empty_frame_counts_zero(self, spark):
+        """No rows: the observed sums are null and read as 0, with
+        the same keys check() returns."""
+        df = spark.createDataFrame([], "x double")
+        exps = [not_null(["x"]), at_least("x", 0)]
+        out, obs = observed(df, exps)
+        out.count()
+        assert assert_observation(obs, df, exps) == check(df, exps) == {
+            "not_null:x": 0, "at_least:x": 0}
 
 
 class TestExactAgg:

@@ -1,11 +1,13 @@
 """End-to-end weather pipeline test (SURVEY.md par.5.3): clean fixture
 produces daily/monthly outputs matching a DuckDB-computed golden;
-dirty fixture fails validation before load.
+dirty fixture fails validation and publishes nothing.
 """
 
 from __future__ import annotations
 
 import math
+import os
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -43,11 +45,61 @@ def test_dirty_pipeline_fails_before_load(spark, fixture_paths, tmp_path):
     out_dir = str(tmp_path / "never_written")
     with pytest.raises(ValidationError) as ei:
         pipeline.run(spark, dirty, output_dir=out_dir)
-    # the sink must not exist (validation gates the load)
-    import os
-
-    assert not os.path.exists(out_dir)
+    # validation gates the load: neither the sink nor its staging
+    # directory (a sibling of out_dir) is left behind
+    assert os.listdir(tmp_path) == []
     assert ei.value.failures  # named violation counts present
+    assert ei.value.samples  # offender rows, queried on failure only
+
+
+def _tree(root):
+    """{relative path: bytes} of every file under ``root``."""
+    return {
+        str(p.relative_to(root)): p.read_bytes()
+        for p in Path(root).rglob("*") if p.is_file()
+    }
+
+
+def test_failed_run_keeps_the_published_sinks(spark, fixture_paths, tmp_path):
+    """Publish only on pass: a dirty run into a directory a clean run
+    already loaded raises and leaves the clean sinks byte-identical."""
+    clean, dirty = fixture_paths
+    out_dir = str(tmp_path / "out")
+    pipeline.run(spark, clean, output_dir=out_dir)
+    published = _tree(out_dir)
+    assert any(p.startswith("daily_weather") for p in published)
+    assert any(p.startswith("monthly_weather") for p in published)
+    with pytest.raises(ValidationError):
+        pipeline.run(spark, dirty, output_dir=out_dir)
+    assert _tree(out_dir) == published
+    assert os.listdir(tmp_path) == ["out"]
+
+
+def test_no_fail_fast_writes_both_sinks(spark, fixture_paths, tmp_path):
+    _, dirty = fixture_paths
+    out_dir = str(tmp_path / "out")
+    res = pipeline.run(spark, dirty, output_dir=out_dir, fail_fast=False)
+    assert res.validation == {}
+    assert spark.read.parquet(f"{out_dir}/daily_weather").count() > 0
+    assert spark.read.parquet(f"{out_dir}/monthly_weather").count() > 0
+    assert sorted(os.listdir(tmp_path)) == ["out"]
+
+
+def test_clean_run_job_budget(spark, fixture_paths, tmp_path):
+    """Validation rides on the sink writes: a clean loading run
+    schedules no aggregate job of its own. Checking before writing
+    (one validation job per sink, each recomputing its plan) took 24
+    jobs."""
+    clean, _ = fixture_paths
+    sc = spark.sparkContext
+    group = f"job-budget-{tmp_path.name}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        pipeline.run(spark, clean, output_dir=str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 12, f"{len(jobs)} Spark jobs"
 
 
 def test_monthly_golden_against_duckdb(spark, fixture_paths):
