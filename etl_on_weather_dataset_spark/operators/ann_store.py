@@ -67,6 +67,7 @@ from pyspark.sql import functions as F
 
 import re
 
+from ..session import local_frame
 from .cluster import kmeans_fit
 from .similarity import SIM_DECIMALS, _as_double, _with_constant_row, dot
 from .versioned import (
@@ -216,8 +217,8 @@ def _publish_version(
     the new segment (or none, for metadata-only publishes)."""
     base = f"{store_path}/v{version}"
     centroids.write.mode("overwrite").parquet(f"{base}/centroids.parquet")
-    spark.createDataFrame(
-        [(s,) for s in segments], "segment string"
+    local_frame(
+        spark, [(s,) for s in segments], "segment string"
     ).coalesce(1).write.mode("overwrite").parquet(f"{base}/manifest.parquet")
     batches.write.mode("overwrite").parquet(f"{base}/batches.parquet")
     commit(spark, base)
@@ -268,12 +269,12 @@ def ivf_index_build(
     )
     cents = kmeans_fit(vecs, k=k, iters=iters, id_col=id_col,
                        vec_col=vec_col, dim=dim, seed=seed)
-    cent_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)],
+    cent_df = local_frame(
+        spark, [(i, c) for i, c in enumerate(cents)],
         "cluster int, cent array<double>",
     )
     cells = _assign_frozen(prepped, cents)
-    batches = spark.createDataFrame([("__build__",)], "batch_id string")
+    batches = local_frame(spark, [("__build__",)], "batch_id string")
     new_v = current_version(spark, store_path) + 1
     seg = _segment_name(new_v, "build")
     cells.write.mode("overwrite").parquet(_segment_path(store_path, seg))
@@ -319,7 +320,7 @@ def ivf_index_append(
         "overwrite"
     ).parquet(_segment_path(store_path, seg))
     new_batches = batches.select("batch_id").unionAll(
-        spark.createDataFrame([(batch_id,)], "batch_id string")
+        local_frame(spark, [(batch_id,)], "batch_id string")
     )
     _publish_version(
         spark, store_path, new_v, cent_df,

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .similarity import (
     _as_double,
     _with_constant_row,
@@ -56,9 +57,14 @@ def _cent_row(spark, cents: list[list[float]]) -> DataFrame:
     self-dot -- a constant -- is computed once per QUERY instead of
     once per data row per centroid (optimization round 12, guide
     par.1.2 "per-task work": at dim=64, k=8 that fold was half the
-    assignment scan's flops on every corpus row)."""
-    df = spark.createDataFrame(
-        [(cents, 0)], "cents array<array<double>>, __k long"
+    assignment scan's flops on every corpus row).
+
+    The row comes from ``local_frame``, so it is a ``LocalRelation``:
+    the ``ccs`` projection folds into it in the JVM and the broadcast
+    runs no Python-worker stage -- per Lloyd round, per build
+    assignment and per query probe."""
+    df = local_frame(
+        spark, [(cents, 0)], "cents array<array<double>>, __k long"
     )
     return df.select(
         "cents",

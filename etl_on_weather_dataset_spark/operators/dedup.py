@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .text import fingerprint, tokens
 
 
@@ -2001,8 +2002,8 @@ def cluster_pairwise_eval(
         (2 * n_common * ppm) // (n_gold + n_pred)
         if (n_gold + n_pred) else ppm,
     )]
-    return df.sparkSession.createDataFrame(
-        rows,
+    return local_frame(
+        df.sparkSession, rows,
         "n_gold_pairs long, n_pred_pairs long, n_common long, "
         "precision_ppm long, recall_ppm long, f1_ppm long",
     )

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 MICRO = 1_000_000
 
 
@@ -125,8 +127,8 @@ def histogram_quantiles(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     w_all = Window.partitionBy(*groups)
-    qdf = sketch.sparkSession.createDataFrame(
-        [(q,) for q in q_ppms], "q_ppm long"
+    qdf = local_frame(
+        sketch.sparkSession, [(q,) for q in q_ppms], "q_ppm long"
     )
     cum = (
         sketch.withColumn("cum", F.sum("cnt").over(w_cum))

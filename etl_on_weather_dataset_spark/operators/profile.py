@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 PPM = 1_000_000
 
 
@@ -449,8 +451,8 @@ def benford_digit_audit(
         .groupBy("digit")
         .agg(F.count(F.lit(1)).cast("long").alias("n_values"))
     )
-    expected = spark.createDataFrame(
-        [(d, p) for d, p in BENFORD_PPM.items()],
+    expected = local_frame(
+        spark, [(d, p) for d, p in BENFORD_PPM.items()],
         "digit int, expected_ppm long",
     )
     total = observed.agg(

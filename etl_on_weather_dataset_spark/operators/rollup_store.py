@@ -40,6 +40,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .versioned import COMMITTED as _COMMITTED
 from .versioned import commit as _commit
 from .versioned import current_version as _current_version
@@ -185,10 +186,10 @@ def incremental_rollup(
         value_scale=value_scale,
     )
     if batches is None:
-        applied = spark.createDataFrame([(batch_id,)], "batch_id string")
+        applied = local_frame(spark, [(batch_id,)], "batch_id string")
     else:
         applied = batches.select("batch_id").unionAll(
-            spark.createDataFrame([(batch_id,)], "batch_id string")
+            local_frame(spark, [(batch_id,)], "batch_id string")
         )
 
     new_v = version + 1

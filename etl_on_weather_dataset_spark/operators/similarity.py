@@ -22,6 +22,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 SIM_DECIMALS = 6
 
 
@@ -363,7 +365,12 @@ def _with_constant_row(
     to a nested loop). The plan stays a BroadcastHashJoin (a per-row
     probe of a 1-entry hashmap), and nested-loop joins remain
     greppable as genuine scale bugs. ``const_df`` must carry a
-    ``__k`` bigint column equal to 0 in its data."""
+    ``__k`` bigint column equal to 0 in its data.
+
+    Callers build ``const_df`` with ``session.local_frame``, so the
+    one row is a ``LocalRelation`` the JVM broadcasts directly: no
+    Python-worker stage behind the broadcast (a ``createDataFrame``
+    list would run one pickled-row task per core each time)."""
     probe = F.pmod(F.xxhash64(F.col(key_col)), F.lit(1))
     return df.join(
         F.broadcast(const_df), probe == F.col("__k")
@@ -422,8 +429,8 @@ def _banded_ids(
     The plane tables ride in as one broadcast row (see
     _with_constant_row); the per-table loop is a higher-order
     transform over that row, so the plan stays small at any T."""
-    planes_df = vecs.sparkSession.createDataFrame(
-        [(planes_per_table, 0)],
+    planes_df = local_frame(
+        vecs.sparkSession, [(planes_per_table, 0)],
         "tables array<array<array<double>>>, __k long",
     )
     tb = F.transform(
@@ -706,8 +713,8 @@ def embedding_near_dup_pairs(
     candidate set, not just the rescored survivors.
     """
     planes_per_table = _multi_table_planes(dim, n_tables, n_planes, seed)
-    planes_df = df.sparkSession.createDataFrame(
-        [(planes_per_table, 0)],
+    planes_df = local_frame(
+        df.sparkSession, [(planes_per_table, 0)],
         "tables array<array<array<double>>>, __k long",
     )
     vecs = df.select(
@@ -876,8 +883,9 @@ def ivf_topk(
     keeps the original first-max argmax expression path bit-for-bit.
     """
     centroids = lsh_hyperplanes(dim, n_cells, seed)
-    cent_df = df.sparkSession.createDataFrame(
-        [(centroids, 0)], "cents array<array<double>>, __k long"
+    cent_df = local_frame(
+        df.sparkSession, [(centroids, 0)],
+        "cents array<array<double>>, __k long",
     )
     vecs = _with_constant_row(
         df.select(
@@ -1189,8 +1197,9 @@ def semdedup(
         # quadratic stays bounded as the corpus grows
         n_cells = scaled_n_cells(df.count(), target_cell_rows)
     centroids = lsh_hyperplanes(dim, n_cells, seed)
-    cent_df = df.sparkSession.createDataFrame(
-        [(centroids, 0)], "cents array<array<double>>, __k long"
+    cent_df = local_frame(
+        df.sparkSession, [(centroids, 0)],
+        "cents array<array<double>>, __k long",
     )
     dots = F.transform(F.col("cents"), lambda c: dot(F.col("v"), c))
     vecs = persisted(
@@ -1370,8 +1379,8 @@ def pq_trained_codebooks(
     d_sub = dim // m_sub
     centroids = lsh_hyperplanes(dim, n_cells, seed)
     spark = df.sparkSession
-    const_df = spark.createDataFrame(
-        [(centroids, 0)], "cents array<array<double>>, __k long"
+    const_df = local_frame(
+        spark, [(centroids, 0)], "cents array<array<double>>, __k long"
     )
     vecs = _with_constant_row(
         df.select(
@@ -1395,8 +1404,8 @@ def pq_trained_codebooks(
         for m in range(m_sub)
     ]
     for _ in range(train_iters):
-        cb_row = spark.createDataFrame(
-            [(books, 0)], "cbs array<array<array<double>>>, __k long"
+        cb_row = local_frame(
+            spark, [(books, 0)], "cbs array<array<array<double>>>, __k long"
         ).select(
             "cbs",
             # constant per-codeword self-dot, evaluated once on the
@@ -1648,8 +1657,8 @@ def ivf_pq_topk(
         )
         if trained else pq_codebooks(dim, m_sub, k_codes, seed)
     )
-    const_df = df.sparkSession.createDataFrame(
-        [(centroids, cbs, 0)],
+    const_df = local_frame(
+        df.sparkSession, [(centroids, cbs, 0)],
         "cents array<array<double>>, "
         "cbs array<array<array<double>>>, __k long",
     )

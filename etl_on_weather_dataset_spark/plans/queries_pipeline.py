@@ -27,6 +27,7 @@ from ..operators.sample import (
     train_test_split,
 )
 from ..schemas import load_table
+from ..session import local_frame
 from .registry import QuerySpec, register
 
 
@@ -1451,8 +1452,8 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     merges, _seqs = learn_bpe_merges(docs, "text", n_merges=_BPE_ROUNDS)
-    return spark.createDataFrame(
-        [(i + 1, a, b) for i, (a, b) in enumerate(merges)],
+    return local_frame(
+        spark, [(i + 1, a, b) for i, (a, b) in enumerate(merges)],
         "step int, a string, b string",
     ).orderBy("step")
 
@@ -1623,8 +1624,8 @@ def _logreg_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, label, "text", "doc_id",
         dim=_LOGREG_DIM, iters=_LOGREG_ITERS,
     )
-    return spark.createDataFrame(
-        [(d, int(v)) for d, v in enumerate(w)], "dim int, w_micro long"
+    return local_frame(
+        spark, [(d, int(v)) for d, v in enumerate(w)], "dim int, w_micro long"
     ).orderBy("dim")
 
 
@@ -2554,7 +2555,7 @@ def _autotuned_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("n_cells_scaled", int(cells)),
         ("sem_keep_le_valid", int(n_keep <= n_valid)),
     ]
-    return spark.createDataFrame(rows, "stage string, n long")
+    return local_frame(spark, rows, "stage string, n long")
 
 
 def _autotuned_curation_oracle() -> str:

@@ -18,6 +18,7 @@ from ..operators.similarity import (
     lsh_topk_sql,
 )
 from ..schemas import load_table
+from ..session import local_frame
 from .registry import QuerySpec, register
 
 _K = 5
@@ -558,8 +559,8 @@ def _ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _RECALL_QUERIES)
     centroids = lsh_hyperplanes(64, _IVF_CELLS, 7)
-    cent_df = spark.createDataFrame(
-        [(centroids, 0)], "cents array<array<double>>, __k long"
+    cent_df = local_frame(
+        spark, [(centroids, 0)], "cents array<array<double>>, __k long"
     )
     vecs = persisted(
         _with_constant_row(
@@ -732,8 +733,8 @@ def _scaled_cells_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     for arm, cells in (("pinned", _SC_PINNED), ("scaled", scaled)):
         probes = _sc_probes(cells)
         centroids = lsh_hyperplanes(64, cells, 7)
-        cent_df = spark.createDataFrame(
-            [(centroids, 0)], "cents array<array<double>>, __k long"
+        cent_df = local_frame(
+            spark, [(centroids, 0)], "cents array<array<double>>, __k long"
         )
         vecs = persisted(
             _with_constant_row(
@@ -1916,8 +1917,8 @@ def _embedding_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = [0.0] * len(sums)
     for r in sums:
         cent[r["pos"]] = (float(r["s"]) / r["n"]) / 1_000_000
-    cent_df = spark.createDataFrame(
-        [(cent, 0)], "c array<double>, __k long"
+    cent_df = local_frame(
+        spark, [(cent, 0)], "c array<double>, __k long"
     )
     scored = _with_constant_row(emb, cent_df, "side").select(
         "side",

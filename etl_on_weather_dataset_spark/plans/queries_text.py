@@ -15,6 +15,7 @@ from ..operators.dedup import (
     simhash_band_pairs,
 )
 from ..schemas import load_table
+from ..session import local_frame
 from .registry import QuerySpec, register
 
 
@@ -390,7 +391,8 @@ def _incremental_dedup_scenario(
         n_store = spark.read.parquet(store).count()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             ("batch1", n1_in, n1_out, n1_out),
             ("batch2", n2_in, n2_out, n_store),
@@ -797,7 +799,8 @@ def _incremental_simhash_scenario(
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             ("batch1", n1_in, 0, 0, 0, 0),
             ("batch2", n2_in, n_copy_in, n_copy_landed,

@@ -38,6 +38,7 @@ from ..operators.urltools import (
     domain_curation_stats_sql,
 )
 from ..schemas import load_table
+from ..session import local_frame
 from .registry import QuerySpec, register
 
 # --- url_domain_curation -------------------------------------------------------
@@ -645,8 +646,8 @@ def _web_ingest_incremental(
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        [row],
+    return local_frame(
+        spark, [row],
         "n_raw_d1 long, n_landed_d1 long, n_quality_d1 long, "
         "n_raw_d2 long, n_landed_d2 long, n_quality_d2 long, "
         "n_oneshot long, n_fp_mismatch long, "

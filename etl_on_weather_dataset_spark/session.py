@@ -10,13 +10,20 @@ Defaults chosen for oracle parity and scale:
 - Arrow on for the few Pandas-UDF paths (multimodal decode).
 - ``shuffle.partitions`` defaults to local core count; on a real
   cluster callers pass ~2-3x total executor cores.
+
+Driver-side rows (constant matrices, metadata, scenario summaries)
+enter Spark through :func:`local_frame` only.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -67,3 +74,23 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str
+) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in ``schema``'s DDL
+    column order), shipped as one Arrow table.
+
+    ``createDataFrame`` on a Python list parallelizes pickled rows, so
+    every action on the frame runs a Python-worker stage -- one task
+    per core even for a single row. An Arrow table below
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    ``LocalRelation`` decoded in the JVM: no Python worker, no task
+    to scan it, and doubles cross bit-exactly."""
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r, strict=True)) for r in rows],
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, schema=struct)

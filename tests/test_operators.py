@@ -3091,6 +3091,66 @@ class TestIvfIndexStore:
         assert not {"v1", "v2"} & dirs
         assert _read_version(spark, store)[3] == 4
 
+    def test_crash_before_marker_keeps_serving_previous_version(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A real crash between the segment write and ``_COMMITTED``:
+        the append's segment and metadata land on disk, the marker
+        never does. Readers keep the previous version and its exact
+        query answers; the next append's GC removes the orphan."""
+        import pathlib
+
+        from etl_on_weather_dataset_spark.operators import ann_store
+
+        store = str(tmp_path / "ivf")
+        ann_store.ivf_index_build(
+            spark, self._emb(spark, n=30, base=0), store,
+            k=4, iters=1, dim=8,
+        )
+        queries = self._emb(spark, n=6, base=0)
+
+        def answers():
+            return sorted(ann_store.ivf_index_query(
+                spark, queries, store, k=3, n_probe=2
+            ).collect())
+
+        before = answers()
+        assert before
+
+        def crash(*_args, **_kwargs):
+            raise RuntimeError("crash before the marker")
+
+        monkeypatch.setattr(ann_store, "commit", crash)
+        with pytest.raises(RuntimeError, match="before the marker"):
+            ann_store.ivf_index_append(
+                spark, self._emb(spark, n=8, base=500), store, "b1"
+            )
+        monkeypatch.undo()
+        orphan = "seg-v2-b1.parquet"
+        assert (pathlib.Path(store) / "segments" / orphan).is_dir()
+        assert not (pathlib.Path(store) / "v2" / "_COMMITTED").exists()
+
+        _, _, batches, version = ann_store._read_version(spark, store)
+        assert version == 1
+        assert {r.batch_id for r in batches.collect()} == {"__build__"}
+        assert answers() == before
+
+        collected: list[list[str]] = []
+        real_gc = ann_store.gc_segments
+
+        def spy(*args, **kwargs):
+            collected.append(real_gc(*args, **kwargs))
+            return collected[-1]
+
+        monkeypatch.setattr(ann_store, "gc_segments", spy)
+        assert ann_store.ivf_index_append(
+            spark, self._emb(spark, n=8, base=700), store, "b2",
+            keep_versions=2,
+        ) == 2
+        assert collected == [[orphan]]
+        assert not (pathlib.Path(store) / "segments" / orphan).exists()
+        assert ann_store._read_version(spark, store)[1].count() == 38
+
     def test_append_writes_o_batch_not_o_index(self, spark, tmp_path):
         """The scale contract of the segment/manifest layout: an
         append must write bytes proportional to the BATCH, never
