@@ -1707,6 +1707,33 @@ class TestIvfPq:
         finally:
             release_all()
 
+    @pytest.mark.parametrize("residual", [False, True])
+    def test_single_probe_matches_oracle(self, spark, residual):
+        """n_probe=1 against the DuckDB twin at sf0.001, raw and
+        residual codes (the registered queries all probe 2 cells)."""
+        from etl_on_weather_dataset_spark.operators.caching import (
+            release_all,
+        )
+        from etl_on_weather_dataset_spark.operators.similarity import (
+            ivf_pq_topk,
+            ivf_pq_topk_sql,
+        )
+        from etl_on_weather_dataset_spark.schemas import load_table
+
+        from .oracle_harness import compare
+
+        sf = "/root/testdata/sf0.001"
+        emb = load_table(spark, sf, "embeddings")
+        try:
+            compare(
+                ivf_pq_topk(emb, k=5, n_probe=1, residual=residual),
+                ivf_pq_topk_sql(k=5, n_probe=1, residual=residual),
+                sf,
+                name=f"ivf_pq_topk_n_probe1_residual{residual}",
+            )
+        finally:
+            release_all()
+
 
 class TestKmeans:
     def test_separates_planted_clusters(self, spark):
