@@ -52,24 +52,34 @@ probe recall degrade -- monitor cell sizes (one groupBy on the cells
 table) and rebuild when skew crosses a threshold; the versioned
 layout makes the rebuild a new store published atomically.
 
-Exactness: assignment uses the SAME micro-snapped argmin as
-operators/cluster.py `_assign` (ROUND(d * 1e6) BIGINT before the
-argmin; unrolled-fold dot products in the oracle), so every cell
-assignment, probe list, and top-k row is reproducible bit-for-bit
-against the DuckDB twin (plans/queries_similarity.py
-``ivf_store_scenario``).
+Exactness: build and append assign with operators/cluster.py
+`_assign` itself (micro-snapped ROUND(d * 1e6) BIGINT distances,
+first-min argmin; unrolled-fold dot products in the oracle). A query
+probes with the shared probe rule, similarity._best_indices, over the
+same snapped distances -- the n nearest cells, ties by the smaller
+cell id, so one probe is exactly the build's argmin -- and ranks with
+the shared similarity._rank_topk. Every cell assignment, probe list,
+and top-k row is reproducible bit-for-bit against the DuckDB twin
+(plans/queries_similarity.py ``ivf_store_scenario``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import re
 
 from ..session import local_frame
-from .cluster import kmeans_fit
-from .similarity import SIM_DECIMALS, _as_double, _with_constant_row, dot
+from .cluster import _assign, _cent_row, _snapped_dists_row, kmeans_fit
+from .similarity import (
+    _as_double,
+    _best_indices,
+    _rank_topk,
+    _score,
+    _with_constant_row,
+    norm,
+)
 from .versioned import (
     commit,
     committed_versions,
@@ -77,47 +87,6 @@ from .versioned import (
     fs_for,
     vacuum,
 )
-
-
-def _assign_frozen(
-    vecs: DataFrame, cents: list[list[float]], n_probe: int = 1
-) -> DataFrame:
-    """(id, v, cluster[, probe_rank]) against FROZEN centroid
-    literals. ``n_probe=1`` is the ingest path (one row per vector,
-    first-min tie-break); ``n_probe>1`` is the query path (the
-    n_probe nearest cells per vector, ranked). The snapped-distance
-    array is cluster._snapped_dists_row itself (round-12 advice: the
-    local copy had become byte-identical after the ccs hoist)."""
-    from .cluster import _cent_row, _snapped_dists_row
-
-    spark = vecs.sparkSession
-    cent_df = _cent_row(spark, cents)
-    joined = _with_constant_row(vecs, cent_df, "id").withColumn(
-        "__d", _snapped_dists_row()
-    )
-    if n_probe == 1:
-        return (
-            joined.withColumn(
-                "cluster",
-                (
-                    F.array_position(F.col("__d"), F.array_min("__d")) - 1
-                ).cast("int"),
-            )
-            .drop("cents", "ccs", "__d")
-        )
-    w = Window.partitionBy("id").orderBy(
-        F.col("dm").asc(), F.col("cluster").asc()
-    )
-    return (
-        joined.select(
-            "id", "v",
-            F.posexplode("__d").alias("pos", "dm"),
-        )
-        .withColumn("cluster", F.col("pos").cast("int"))
-        .withColumn("probe_rank", F.row_number().over(w))
-        .filter(F.col("probe_rank") <= n_probe)
-        .select("id", "v", "cluster", "probe_rank")
-    )
 
 
 def _segment_dir(store_path: str) -> str:
@@ -180,6 +149,27 @@ def _read_version(
         spark.read.parquet(f"{base}/batches.parquet"),
         v,
     )
+
+
+def _committed(
+    spark: SparkSession, store_path: str
+) -> tuple[DataFrame, DataFrame, DataFrame, int]:
+    """:func:`_read_version` of the newest committed version; raises
+    on an empty store."""
+    found = _read_version(spark, store_path)
+    if found[0] is None:
+        raise ValueError(
+            f"no committed index at {store_path}; run ivf_index_build"
+        )
+    return found
+
+
+def _frozen_centroids(cent_df: DataFrame) -> list[list[float]]:
+    """The committed centroids as literals, in cluster order."""
+    return [
+        list(r.cent)
+        for r in sorted(cent_df.collect(), key=lambda r: r.cluster)
+    ]
 
 
 def gc_segments(spark: SparkSession, store_path: str) -> list[str]:
@@ -273,7 +263,7 @@ def ivf_index_build(
         spark, [(i, c) for i, c in enumerate(cents)],
         "cluster int, cent array<double>",
     )
-    cells = _assign_frozen(prepped, cents)
+    cells = _assign(prepped, cents)
     batches = local_frame(spark, [("__build__",)], "batch_id string")
     new_v = current_version(spark, store_path) + 1
     seg = _segment_name(new_v, "build")
@@ -299,24 +289,16 @@ def ivf_index_append(
     existing cells are never read or rewritten. Replaying a recorded
     ``batch_id`` is a no-op (returns the current version).
     """
-    cent_df, _, batches, version = _read_version(spark, store_path)
-    if cent_df is None:
-        raise ValueError(
-            f"no committed index at {store_path}; run ivf_index_build"
-        )
+    cent_df, _, batches, version = _committed(spark, store_path)
     if batch_id in {r.batch_id for r in
                     batches.select("batch_id").collect()}:
         return version  # replay: batch already in the index
-    cents = [
-        list(r.cent)
-        for r in sorted(cent_df.collect(), key=lambda r: r.cluster)
-    ]
     prepped = new_vecs.select(
         F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
     )
     new_v = version + 1
     seg = _segment_name(new_v, batch_id)
-    _assign_frozen(prepped, cents).select("id", "v", "cluster").write.mode(
+    _assign(prepped, _frozen_centroids(cent_df)).write.mode(
         "overwrite"
     ).parquet(_segment_path(store_path, seg))
     new_batches = batches.select("batch_id").unionAll(
@@ -344,11 +326,7 @@ def ivf_index_compact(
     (caller's policy). Superseded segments become garbage for
     :func:`gc_segments` once retention drops the versions naming
     them. No-op (returns the current version) when already compact."""
-    cent_df, cells, batches, version = _read_version(spark, store_path)
-    if cent_df is None:
-        raise ValueError(
-            f"no committed index at {store_path}; run ivf_index_build"
-        )
+    cent_df, cells, batches, version = _committed(spark, store_path)
     if len(_manifest_names(spark, store_path, version)) <= 1:
         return version
     new_v = version + 1
@@ -388,11 +366,7 @@ def ivf_store_stats(
     telling you WHEN to rebuild; ``n_segments`` tells you when to
     compact. Cost: one groupBy over the cells table + metadata reads.
     """
-    _, cells, _, version = _read_version(spark, store_path)
-    if cells is None:
-        raise ValueError(
-            f"no committed index at {store_path}; run ivf_index_build"
-        )
+    _, cells, _, version = _committed(spark, store_path)
     n_segments = len(_manifest_names(spark, store_path, version))
     per_cell = cells.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("rows")
@@ -423,37 +397,21 @@ def ivf_index_query(
     cells were built with), score only their members, exact-rescore
     with the house rounding + tie-break. Returns
     (query_id, neighbor_id, sim, rk)."""
-    cent_df, cells, _, version = _read_version(spark, store_path)
-    if cent_df is None:
-        raise ValueError(
-            f"no committed index at {store_path}; run ivf_index_build"
-        )
-    cents = [
-        list(r.cent)
-        for r in sorted(cent_df.collect(), key=lambda r: r.cluster)
-    ]
-    qv = queries.select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
+    cent_df, cells, _, _ = _committed(spark, store_path)
+    qv = _with_constant_row(
+        queries.select(
+            F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
+        ),
+        _cent_row(spark, _frozen_centroids(cent_df)),
+        "id",
     )
-    probes = _assign_frozen(qv, cents, n_probe=n_probe).select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"), "cluster"
-    ).withColumn("qn", F.sqrt(dot(F.col("qv"), F.col("qv"))))
+    probes = qv.select(
+        F.col("id").alias("query_id"), F.col("v").alias("qv"),
+        F.explode(_best_indices(_snapped_dists_row(), n_probe))
+        .alias("cluster"),
+    ).withColumn("qn", norm(F.col("qv")))
     members = cells.select(
         F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
         "cluster",
-    ).withColumn("cn", F.sqrt(dot(F.col("cv"), F.col("cv"))))
-    sim = F.round(
-        dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        SIM_DECIMALS,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        probes.join(members, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
+    ).withColumn("cn", norm(F.col("cv")))
+    return _rank_topk(_score(probes.join(members, "cluster")), k)

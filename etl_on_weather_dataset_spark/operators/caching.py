@@ -56,17 +56,18 @@ def untrack(df: DataFrame) -> None:
         pass
 
 
-def release_all(blocking: bool = False) -> int:
-    """Unpersist every tracked frame; returns how many were released."""
+def release_all() -> int:
+    """Unpersist every tracked frame (non-blocking); returns how many
+    were released."""
     n = 0
     while _TRACKED:
-        _TRACKED.pop().unpersist(blocking)
+        _TRACKED.pop().unpersist(False)
         n += 1
     return n
 
 
 @contextmanager
-def scoped(blocking: bool = False) -> Iterator[None]:
+def scoped() -> Iterator[None]:
     """Release only the frames persisted INSIDE this block.
 
     ``with scoped(): run_query()`` is the batch-owner idiom when other
@@ -79,4 +80,4 @@ def scoped(blocking: bool = False) -> Iterator[None]:
         yield
     finally:
         while len(_TRACKED) > mark:
-            _TRACKED.pop().unpersist(blocking)
+            _TRACKED.pop().unpersist(False)

@@ -1,18 +1,33 @@
 """Similarity search over an embedding column (north-star par.2b).
 
-- brute-force cosine top-k: the exact baseline. Cross-join of queries
-  against the corpus with the dot product as pure array expressions
-  (`zip_with` + `aggregate`, JVM-side, no Python); top-k per query via
-  window. Cost O(|Q| x |C|): right for small query sets or reranking.
-- LSH-bucketed top-k: the scale path. Random-hyperplane signatures
-  (fixed, seeded, shipped as literal arrays -> identical across
-  engines/runs) bucket the corpus; candidates come only from the
-  query's bucket. Sub-linear scans at the cost of recall.
+Every top-k operator is candidate generation followed by ONE exact
+verify-and-rank step (the filter-and-verify split):
 
-Determinism: similarity is computed in float64 and ROUNDED before
-ranking; ties broken by neighbor id. That makes top-k membership
-independent of summation order (Spark partial aggregation vs the
-oracle's sequential loop).
+- brute-force cosine top-k (cosine_topk): the exact baseline. Cross
+  join of queries against the corpus with the dot product as pure
+  array expressions (`zip_with` + `aggregate`, JVM-side, no Python).
+  Cost O(|Q| x |C|): right for small query sets or reranking.
+- LSH top-k (lsh_topk_multi; lsh_topk is its one-table case):
+  random-hyperplane signatures (fixed, seeded, shipped as a broadcast
+  constants row -> identical across engines/runs) bucket the corpus in
+  ``n_tables`` independent tables; a pair is a candidate if it shares
+  a bucket in ANY table. Sub-linear scans at the cost of recall.
+- IVF top-k (ivf_topk): vectors live in their argmax Voronoi cell;
+  a query probes its ``n_probe`` nearest cells.
+- IVF-PQ top-k (ivf_pq_topk): IVF cells, but the candidate join ships
+  product-quantized codes; an ADC score picks a ``rerank`` shortlist,
+  which the exact step then ranks.
+
+One probe rule (_best_indices): a query's cells are the n best
+entries of its key array, ties by the smaller index -- one probe is
+the argmax (argmin) assignment itself. One ranking rule (_score +
+_rank_topk): similarity is computed in float64 and ROUNDED to
+SIM_DECIMALS before ranking, self-matches are dropped, and each query
+keeps its k best rows by (sim desc, neighbor_id asc). Rounding makes
+top-k membership independent of summation order (Spark partial
+aggregation vs the oracle's sequential loop). The DuckDB twins
+(``*_sql``) are the reference implementations and spell both rules
+out in SQL.
 """
 
 from __future__ import annotations
@@ -100,6 +115,54 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+# The verify-and-rank step (module docstring): _side -> _score ->
+# _rank_topk.
+_SIDES = {
+    "query": ("query_id", "qv", "qn"),
+    "neighbor": ("neighbor_id", "cv", "cn"),
+}
+
+
+def _side(vecs: DataFrame, role: str, *extra) -> DataFrame:
+    """One side of a candidate pair from (id, v, n) rows: ``role``
+    "query" gives (query_id, qv, qn, *extra), "neighbor" gives
+    (neighbor_id, cv, cn, *extra) -- the columns _score reads."""
+    i, v, n = _SIDES[role]
+    return vecs.select(
+        F.col("id").alias(i), F.col("v").alias(v), F.col("n").alias(n),
+        *extra,
+    )
+
+
+def _score(
+    pairs: DataFrame, *keep: str, sim: Column | None = None
+) -> DataFrame:
+    """(query_id, neighbor_id, *keep, sim) of candidate pairs with
+    self-matches dropped. ``sim`` defaults to the house similarity:
+    cosine of (qv, qn) against (cv, cn) in float64, ROUNDED to
+    SIM_DECIMALS before any ranking sees it."""
+    if sim is None:
+        sim = F.round(
+            dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
+            SIM_DECIMALS,
+        )
+    return pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", *keep, sim.alias("sim")
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """THE ranking rule: each query's ``k`` best rows by ``sim``
+    descending, ties by the smaller ``neighbor_id``, numbered from 1
+    in ``rk`` (an existing ``rk`` is replaced)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id").asc()
+    )
+    return scored.withColumn("rk", F.row_number().over(w)).filter(
+        F.col("rk") <= k
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -113,29 +176,13 @@ def cosine_topk(
     of the cross join is broadcast when small enough (hint left to
     AQE -- a 100 TB corpus must shuffle instead)."""
     q = queries.select(
-        F.col(query_id).alias("query_id"),
-        _as_double(vec_col).alias("qv"),
-    ).withColumn("qn", norm(F.col("qv")))
+        F.col(query_id).alias("id"), _as_double(vec_col).alias("v")
+    ).withColumn("n", norm(F.col("v")))
     c = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"),
-        _as_double(vec_col).alias("cv"),
-    ).withColumn("cn", norm(F.col("cv")))
-    sim = F.round(
-        dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        SIM_DECIMALS,
-    )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
+        F.col(corpus_id).alias("id"), _as_double(vec_col).alias("v")
+    ).withColumn("n", norm(F.col("v")))
+    return _rank_topk(
+        _score(_side(q, "query").crossJoin(_side(c, "neighbor"))), k
     )
 
 
@@ -220,21 +267,8 @@ def cosine_topk_pandas(
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"), _as_double(vec_col).alias("cv")
     )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            cos_sim(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
+    return _rank_topk(
+        _score(q.crossJoin(c), sim=cos_sim(F.col("qv"), F.col("cv"))), k
     )
 
 
@@ -284,17 +318,6 @@ def lsh_hyperplanes(dim: int, n_planes: int = 8, seed: int = 42) -> list[list[fl
     return planes
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id of a vector against fixed hyperplanes."""
-    bucket = F.lit(0)
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(x) for x in p])
-        bucket = bucket + F.when(dot(vec, plane) > 0, F.lit(1 << i)).otherwise(
-            F.lit(0)
-        )
-    return bucket
-
-
 def lsh_topk(
     df: DataFrame,
     k: int = 5,
@@ -305,39 +328,14 @@ def lsh_topk(
     seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH
-    bucket. The join is an equi-join on bucket id -- at 100 TB each
-    bucket is ~N/2^planes rows and the quadratic blow-up is contained
-    per-bucket (add planes to shrink buckets)."""
-    planes = lsh_hyperplanes(dim, n_planes, seed)
-    vecs = df.select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-    ).withColumn("bucket", lsh_bucket(F.col("v"), planes)).withColumn(
-        "n", norm(F.col("v"))
-    )
-    a = vecs.select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("n").alias("qn"), "bucket",
-    )
-    b = vecs.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("n").alias("cn"), "bucket",
-    )
-    sim = F.round(
-        dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        SIM_DECIMALS,
-    )
-    scored = (
-        a.join(b, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
+    bucket -- lsh_topk_multi with one table (the same seeded plane
+    family, buckets and rescore). The candidate join is an equi-join
+    on bucket id -- at 100 TB each bucket is ~N/2^planes rows and the
+    quadratic blow-up is contained per-bucket (add planes to shrink
+    buckets)."""
+    return lsh_topk_multi(
+        df, df, k, id_col, id_col, vec_col, n_tables=1,
+        n_planes=n_planes, dim=dim, seed=seed,
     )
 
 
@@ -381,9 +379,8 @@ def _multi_table_planes(
     dim: int, n_tables: int, n_planes: int, seed: int
 ) -> list[list[list[float]]]:
     """One independent plane family per LSH table (seed + 1000*t --
-    the same family layout embedding_near_dup_pairs uses, so
-    ``n_tables=1`` reproduces the single-table lsh_topk buckets
-    exactly)."""
+    the same family layout embedding_near_dup_pairs uses; table 0 is
+    lsh_hyperplanes(dim, n_planes, seed), the lsh_topk_sql planes)."""
     return [
         lsh_hyperplanes(dim, n_planes, seed + 1000 * t)
         for t in range(n_tables)
@@ -392,12 +389,12 @@ def _multi_table_planes(
 
 def _bucket_from_planes(vec: Column, planes: Column) -> Column:
     """Sign-bit bucket of ``vec`` against a DATA-side array of planes
-    (array<array<double>>). Same math and same float-op order as
-    ``lsh_bucket`` (zip_with product + sequential fold per plane, bit
-    b set iff dot > 0), but the planes live in a broadcast ROW, not in
-    the expression tree: lsh_bucket inlines n_planes x dim literal
-    nodes per call, and Catalyst analysis + Janino compile of those
-    trees measurably dominates multi-table queries (~0.75 s per table
+    (array<array<double>>): a zip_with product + sequential fold per
+    plane, bit b set iff dot > 0 -- the same float ops as the oracle's
+    CASE chain. The planes live in a broadcast ROW, not in the
+    expression tree: inlining n_planes x dim literal nodes per call
+    makes Catalyst analysis + Janino compile dominate multi-table
+    queries (~0.75 s per table
     instance at 8 planes x 64 dims -- on 500 rows). Here the planes
     arrive as a broadcast row (_with_constant_row) and the expression
     is a fixed-size higher-order fold, so plan cost is constant in
@@ -511,7 +508,7 @@ def lsh_topk_multi(
     broadcast_queries: bool = False,
 ) -> DataFrame:
     """OR-amplified multi-table ANN top-k (the recall fix for
-    single-table lsh_topk).
+    single-table lsh_topk, which is this operator at ``n_tables=1``).
 
     Single-table LSH top-k holds recall hostage to one partition of
     the space: a true neighbor on the far side of any one hyperplane
@@ -535,7 +532,7 @@ def lsh_topk_multi(
 
     Determinism: seeded plane literals shared verbatim with the SQL
     twin; similarities rounded before ranking; ties broken by
-    neighbor id. ``n_tables=1`` reproduces lsh_topk exactly.
+    neighbor id.
     """
     from .caching import persisted
 
@@ -553,38 +550,13 @@ def lsh_topk_multi(
         qv, cv, "id", "id", "v", n_tables, n_planes, dim, seed,
         broadcast_queries=broadcast_queries,
     )
-    sim = F.round(
-        dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        SIM_DECIMALS,
-    )
-    q_side = qv.select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("n").alias("qn"),
-    )
+    q_side = _side(qv, "query")
     if broadcast_queries:
         q_side = F.broadcast(q_side)
-    scored = (
-        cand.join(
-            q_side,
-            "query_id",
-        )
-        .join(
-            cv.select(
-                F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-                F.col("n").alias("cn"),
-            ),
-            "neighbor_id",
-        )
-        .select("query_id", "neighbor_id", sim.alias("sim"))
+    pairs = cand.join(q_side, "query_id").join(
+        _side(cv, "neighbor"), "neighbor_id"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
+    return _rank_topk(_score(pairs), k)
 
 
 def _banded_cte_sql(
@@ -804,19 +776,20 @@ def _argmax_from_dots(dots: Column) -> Column:
     return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
 
 
-def _probes_from_dots(dots: Column, n_probe: int) -> Column:
-    """0-based indices of the ``n_probe`` largest dots, largest
-    first; ties by smaller index (so element 1 always equals
-    _argmax_from_dots). Sorting structs of (-dot, index) gives the
-    deterministic total order in both engines."""
+def _best_indices(keys: Column, n: int, largest: bool = False) -> Column:
+    """THE probe rule: 0-based indices of the ``n`` best entries of
+    ``keys`` -- the smallest (or the ``largest``) first -- ties by the
+    smaller index, so element 1 is the first-min (first-max) index
+    that argmin/argmax assignment uses. Sorting structs of (key, index)
+    (negated key for ``largest``) gives the deterministic total order
+    in both engines; the IVF twins sort the same structs."""
     order = F.zip_with(
-        dots,
-        F.sequence(F.lit(0), F.size(dots) - 1),
-        lambda d, i: F.struct((-d).alias("nd"), i.alias("i")),
+        keys,
+        F.sequence(F.lit(0), F.size(keys) - 1),
+        lambda d, i: F.struct((-d if largest else d).alias("nd"),
+                              i.alias("i")),
     )
-    return F.transform(
-        F.slice(F.array_sort(order), 1, n_probe), lambda s: s["i"]
-    )
+    return F.transform(F.slice(F.array_sort(order), 1, n), lambda s: s["i"])
 
 
 def _centroid_argmax(vec: Column, centroids: Column) -> Column:
@@ -831,11 +804,10 @@ def _centroid_argmax(vec: Column, centroids: Column) -> Column:
     per-element literal trees are the wrong place for constant
     matrices).
 
-    Callers that ALSO need probe lists (n_probe > 1) should project
-    the dots array once and use _argmax_from_dots/_probes_from_dots
-    on the shared column instead of calling this plus _probe_cells --
-    each call re-folds all n_cells dots per row (optimization round
-    12; ivf_topk/ivf_pq_topk do this now).
+    Callers that ALSO need probe lists should project the dots array
+    once and use _argmax_from_dots/_best_indices on the shared column
+    instead of calling this plus _probe_cells -- each call re-folds
+    all n_cells dots per row (ivf_topk/ivf_pq_topk do this).
     """
     dots = F.transform(centroids, lambda c: dot(vec, c))
     return _argmax_from_dots(dots)
@@ -846,7 +818,32 @@ def _probe_cells(vec: Column, centroids: Column, n_probe: int) -> Column:
     product, nearest first; ties by smaller index (so element 1 always
     equals _centroid_argmax)."""
     dots = F.transform(centroids, lambda c: dot(vec, c))
-    return _probes_from_dots(dots, n_probe)
+    return _best_indices(dots, n_probe, largest=True)
+
+
+def _celled(
+    df: DataFrame, const_df: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, v, n, *constants, __dots, cell): each vector with its norm,
+    its dots against the ``cents`` of the attached one-row constants
+    relation, and its argmax cell. ONE dots fold per row, shared by
+    the cell and any probe list (Catalyst keeps the non-cheap
+    transform in its own Project, so it is evaluated once)."""
+    return (
+        _with_constant_row(
+            df.select(
+                F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
+            ),
+            const_df,
+            "id",
+        )
+        .withColumn("n", norm(F.col("v")))
+        .withColumn(
+            "__dots",
+            F.transform(F.col("cents"), lambda c: dot(F.col("v"), c)),
+        )
+        .withColumn("cell", _argmax_from_dots(F.col("__dots")))
+    )
 
 
 def ivf_topk(
@@ -879,98 +876,24 @@ def ivf_topk(
     probe rows pre-join -- constant width, linear cost.
 
     Deterministic: seeded centroid literals shared verbatim with the
-    SQL oracle -- cell assignment itself is hash-checked. n_probe=1
-    keeps the original first-max argmax expression path bit-for-bit.
+    SQL oracle -- cell assignment itself is hash-checked.
     """
     centroids = lsh_hyperplanes(dim, n_cells, seed)
     cent_df = local_frame(
         df.sparkSession, [(centroids, 0)],
         "cents array<array<double>>, __k long",
     )
-    vecs = _with_constant_row(
-        df.select(
-            F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-        ),
-        cent_df,
-        "id",
-    ).withColumn("n", norm(F.col("v")))
-    if n_probe > 1:
-        # ONE dots fold per row, shared by the argmax cell and the
-        # probe list (optimization round 12: _centroid_argmax +
-        # _probe_cells each re-folded all n_cells dots; the projected
-        # column halves the assignment flops -- Catalyst keeps the
-        # non-cheap transform in its own Project, so it is evaluated
-        # once). Same expressions over the same array -> identical
-        # cell/probe values.
-        vecs = (
-            vecs.withColumn(
-                "__dots",
-                F.transform(
-                    F.col("cents"), lambda c: dot(F.col("v"), c)
-                ),
-            )
-            .withColumn("cell", _argmax_from_dots(F.col("__dots")))
-            .withColumn(
-                "probes", _probes_from_dots(F.col("__dots"), n_probe)
-            )
-            .drop("__dots")
+    vecs = (
+        _celled(df, cent_df, id_col, vec_col)
+        .withColumn(
+            "probes",
+            _best_indices(F.col("__dots"), n_probe, largest=True),
         )
-    else:
-        vecs = vecs.withColumn(
-            "cell", _centroid_argmax(F.col("v"), F.col("cents"))
-        )
-    vecs = vecs.drop("cents")
-    if n_probe > 1:
-        a = vecs.select(
-            F.col("id").alias("query_id"), F.col("v").alias("qv"),
-            F.col("n").alias("qn"),
-            F.explode(F.col("probes")).alias("cell"),
-        )
-        b = vecs.select(
-            F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-            F.col("n").alias("cn"), "cell",
-        )
-        sim = F.round(
-            dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-            SIM_DECIMALS,
-        )
-        scored = (
-            a.join(b, "cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id", sim.alias("sim"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("sim").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select("query_id", "neighbor_id", "sim", "rk")
-        )
-    a = vecs.select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("n").alias("qn"), "cell",
+        .drop("__dots", "cents")
     )
-    b = vecs.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("n").alias("cn"), "cell",
-    )
-    sim = F.round(
-        dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        SIM_DECIMALS,
-    )
-    scored = (
-        a.join(b, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
+    a = _side(vecs, "query", F.explode(F.col("probes")).alias("cell"))
+    return _rank_topk(
+        _score(a.join(_side(vecs, "neighbor", "cell"), "cell")), k
     )
 
 
@@ -1673,139 +1596,71 @@ def ivf_pq_topk(
             ).alias("cbs_cc"),
             "__k",
         )
-    vecs = _with_constant_row(
-        df.select(
-            F.col(id_col).alias("id"), _as_double(vec_col).alias("v")
-        ),
-        const_df,
-        "id",
-    ).withColumn("n", norm(F.col("v")))
-    if n_probe > 1:
-        # ONE dots fold per row shared by the argmax cell, the probe
-        # list, and (residual mode) the per-probe <q, cent> terms --
-        # previously each was its own full re-fold of all n_cells
-        # dots per row (optimization round 12). Same expressions over
-        # the same array -> identical values.
-        vecs = vecs.withColumn(
-            "__dots",
-            F.transform(F.col("cents"), lambda c: dot(F.col("v"), c)),
-        ).withColumn("cell", _argmax_from_dots(F.col("__dots")))
-    else:
-        vecs = vecs.withColumn(
-            "cell", _centroid_argmax(F.col("v"), F.col("cents"))
-        )
-    sel_cent = F.element_at(F.col("cents"), F.col("cell") + 1)
+    vecs = _celled(df, const_df, id_col, vec_col)
     enc_vec = (
-        F.zip_with(F.col("v"), sel_cent, lambda x, y: x - y)
+        F.zip_with(
+            F.col("v"),
+            F.element_at(F.col("cents"), F.col("cell") + 1),
+            lambda x, y: x - y,
+        )
         if residual else F.col("v")
     )
-    vecs = vecs.withColumn(
-        "codes",
-        _pq_encode_l2(
-            enc_vec, F.col("cbs"), m_sub, d_sub, F.col("cbs_cc")
-        )
-        if trained
-        else _pq_encode(enc_vec, F.col("cbs"), m_sub, d_sub),
+    # per-probe (cell, <q, cent(cell)>): __dots already holds
+    # dot(v, cents[i]) for every cell, so the residual-mode correction
+    # term is an array lookup, not a re-fold
+    qcs = F.transform(
+        _best_indices(F.col("__dots"), n_probe, largest=True),
+        lambda p: F.struct(
+            p.alias("cell"),
+            F.element_at(F.col("__dots"), p + 1).alias("qc"),
+        ),
     )
-    if n_probe > 1:
-        vecs = vecs.withColumn(
-            "probes", _probes_from_dots(F.col("__dots"), n_probe)
-        )
-        if residual:
-            # per-probe <q, cent(cell)> correction terms: __dots
-            # already holds dot(v, cents[i]) for every cell, so the
-            # per-probe term is an array lookup, not a re-fold
-            vecs = vecs.withColumn(
-                "qcs",
-                F.transform(
-                    F.col("probes"),
-                    lambda p: F.struct(
-                        p.alias("cell"),
-                        F.element_at(F.col("__dots"), p + 1).alias("qc"),
-                    ),
-                ),
-            )
-        vecs = vecs.drop("__dots")
-    elif residual:
-        vecs = vecs.withColumn("qc", dot(F.col("v"), sel_cent))
     from .caching import persisted
 
     vecs = persisted(
         vecs.withColumn(
+            "codes",
+            _pq_encode_l2(
+                enc_vec, F.col("cbs"), m_sub, d_sub, F.col("cbs_cc")
+            )
+            if trained
+            else _pq_encode(enc_vec, F.col("cbs"), m_sub, d_sub),
+        )
+        .withColumn("qcs", qcs)
+        .withColumn(
             "adc", _pq_adc_table(F.col("v"), F.col("cbs"), m_sub, d_sub)
-        ).drop("cents", "cbs", "cbs_cc")
+        )
+        .drop("__dots", "cents", "cbs", "cbs_cc")
     )
     # query side ships the small ADC table (m_sub*k_codes doubles),
     # not the vector and not the codebooks
-    if n_probe > 1:
-        if residual:
-            qp = F.explode(F.col("qcs")).alias("p")
-            a = vecs.select(
-                F.col("id").alias("query_id"), F.col("adc"), qp
-            ).select(
-                "query_id", "adc",
-                F.col("p.cell").alias("cell"), F.col("p.qc").alias("qc"),
-            )
-        else:
-            a = vecs.select(
-                F.col("id").alias("query_id"), F.col("adc"),
-                F.explode(F.col("probes")).alias("cell"),
-            )
-    else:
-        cols = [
-            F.col("id").alias("query_id"), F.col("adc"), F.col("cell")
-        ]
-        if residual:
-            cols.append(F.col("qc"))
-        a = vecs.select(*cols)
+    a = vecs.select(
+        F.col("id").alias("query_id"), "adc",
+        F.explode(F.col("qcs")).alias("p"),
+    ).select("query_id", "adc", "p.cell", "p.qc")
     # candidate side ships codes only -- no vectors
     b = vecs.select(
         F.col("id").alias("neighbor_id"), F.col("cell"), "codes",
     )
-    approx_raw = _pq_approx_dot(F.col("adc"), F.col("codes"), m_sub)
+    approx = _pq_approx_dot(F.col("adc"), F.col("codes"), m_sub)
     if residual:
-        approx_raw = F.col("qc") + approx_raw
-    approx = F.round(approx_raw, SIM_DECIMALS)
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("approx").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        a.join(b, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", approx.alias("approx"))
-        .withColumn("srk", F.row_number().over(w_short))
-        .filter(F.col("srk") <= rerank)
-        .select("query_id", "neighbor_id", "srk")
-    )
-    qv = vecs.select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("n").alias("qn"),
-    )
-    cv = vecs.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("n").alias("cn"),
-    )
-    sim = F.round(
-        dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        SIM_DECIMALS,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
+        approx = F.col("qc") + approx
+    # the ADC shortlist: the same ranking rule over the rounded approx
+    # score; its rank is srk
+    shortlist = _rank_topk(
+        _score(a.join(b, "cell"), sim=F.round(approx, SIM_DECIMALS)),
+        rerank,
+    ).select("query_id", "neighbor_id", F.col("rk").alias("srk"))
     out_cols = ["query_id", "neighbor_id", "sim", "rk"]
     if with_shortlist_rank:
         # srk (the ADC approx rank) lets evaluation harnesses derive
         # every smaller-rerank result from one build: shortlists are
         # nested, so filter(srk <= r) + re-rank == rerank=r exactly
         out_cols.append("srk")
-    return (
-        shortlist.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .select("query_id", "neighbor_id", "srk", sim.alias("sim"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(*out_cols)
+    pairs = shortlist.join(_side(vecs, "query"), "query_id").join(
+        _side(vecs, "neighbor"), "neighbor_id"
     )
+    return _rank_topk(_score(pairs, "srk"), k).select(*out_cols)
 
 
 def ivf_pq_topk_sql(

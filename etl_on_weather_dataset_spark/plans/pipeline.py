@@ -13,8 +13,10 @@ Reference mapping (SURVEY.md par.3):
   when every count is 0.
 - The shared cleaned fact table feeds three branches (daily agg,
   monthly agg, wind-strength details); in eager pandas that reuse is
-  free, in lazy Spark we `cache()` it for the duration of the run
-  (SURVEY.md par.4 "common subplan reuse").
+  free, in lazy Spark we cache it on the caching ledger
+  (SURVEY.md par.4 "common subplan reuse"): a loading run releases it
+  once its sinks are written, a run without ``output_dir`` leaves it
+  backing the returned frames until ``caching.release_all()``.
 
 Scale notes: outputs partitioned by month; validation costs no pass of
 its own (the writes evaluate it) and publishing is metadata-only
@@ -29,8 +31,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..operators.agg import mean_rollup
+from ..operators.caching import persisted, scoped
 from ..operators.clean import coerce_timestamp, dedup_exact, impute_median
 from ..operators.derive import with_date_parts, with_wind_strength
 from ..operators.joins import fanout_join_daily
@@ -76,8 +80,6 @@ class WeatherPipelineResult:
     daily: DataFrame
     monthly: DataFrame
     validation: dict[str, int] = field(default_factory=dict)
-    # the cached cleaned fact table (unpersisted by run() after sinks)
-    _cached: DataFrame | None = None
 
 
 def extract(spark: SparkSession, csv_path: str) -> DataFrame:
@@ -106,8 +108,9 @@ def transform(df: DataFrame) -> WeatherPipelineResult:
     df = with_date_parts(df, "Formatted Date")
     # U1: Beaufort bucketing (ETL.py:80-107)
     df = with_wind_strength(df, "Wind Speed (km/h)")
-    # Shared fact table feeds 3 branches -> cache once (SURVEY par.4)
-    df = df.cache()
+    # Shared fact table feeds 3 branches -> cache once (SURVEY par.4),
+    # at cache()'s level, on the ledger so release_all() can free it
+    df = persisted(df, StorageLevel.MEMORY_AND_DISK_DESER)
 
     # A1: daily means (ETL.py:69-73). scale=1000: inputs are 2-dp and
     # the imputed median is at most 3-dp (midpoint of two 2-dp values),
@@ -143,7 +146,7 @@ def transform(df: DataFrame) -> WeatherPipelineResult:
         modes={"Precip Type": "mode_precip_type"},
     )
 
-    return WeatherPipelineResult(daily=daily, monthly=monthly, _cached=df)
+    return WeatherPipelineResult(daily=daily, monthly=monthly)
 
 
 def daily_expectations() -> list[Expectation]:
@@ -186,6 +189,18 @@ def reshape_monthly(monthly: DataFrame) -> DataFrame:
     return monthly.select(*MONTHLY_SINK_COLS)
 
 
+def _outputs(raw: DataFrame) -> tuple[DataFrame, DataFrame, list]:
+    """(daily sink frame, monthly sink frame, [(name, frame,
+    expectations, partition_by)]) of one transform over ``raw``."""
+    result = transform(raw)
+    daily_out = reshape_daily(result.daily)
+    monthly_out = reshape_monthly(result.monthly)
+    return daily_out, monthly_out, [
+        ("daily_weather", daily_out, daily_expectations(), ["month"]),
+        ("monthly_weather", monthly_out, monthly_expectations(), None),
+    ]
+
+
 def run(
     spark: SparkSession,
     csv_path: str,
@@ -208,16 +223,9 @@ def run(
     ``check()`` per output gates the returned DataFrames.
     """
     raw = extract(spark, csv_path)
-    result = transform(raw)
-    daily_out = reshape_daily(result.daily)
-    monthly_out = reshape_monthly(result.monthly)
-    sinks = [
-        ("daily_weather", daily_out, daily_expectations(), ["month"]),
-        ("monthly_weather", monthly_out, monthly_expectations(), None),
-    ]
-
-    validation: dict[str, int] = {}
     if output_dir is None:
+        daily_out, monthly_out, sinks = _outputs(raw)
+        validation: dict[str, int] = {}
         if fail_fast:
             for _, out, expectations, _ in sinks:
                 validation.update(check(out, expectations))
@@ -233,32 +241,35 @@ def run(
     stage = hpath(
         dest.getParent(), f"_{dest.getName()}.staging-{uuid.uuid4().hex}"
     )
-    try:
-        gates = []
-        for name, out, expectations, partition_by in sinks:
-            written = out
-            if fail_fast:
-                written, obs = observed(out, expectations, name)
-                gates.append((obs, out, expectations))
-            write_parquet(
-                written, hpath(stage, name).toString(),
-                partition_by=partition_by,
-            )
-        for obs, out, expectations in gates:
-            validation.update(assert_observation(obs, out, expectations))
-        fs.mkdirs(dest)
-        for name, *_ in sinks:
-            target = hpath(dest, name)
-            fs.delete(target, True)
-            if not fs.rename(hpath(stage, name), target):
-                raise OSError(f"could not publish {name} to {target}")
-    finally:
-        fs.delete(stage, True)
-        # sinks are materialized (or abandoned) -- release the cached
-        # fact table so a long-lived session doesn't accumulate
-        # block-manager memory
-        if result._cached is not None:
-            result._cached.unpersist()
+    validation = {}
+    # the scope releases the cached fact table once the sinks are
+    # materialized (or abandoned), so a long-lived session doesn't
+    # accumulate block-manager memory
+    with scoped():
+        daily_out, monthly_out, sinks = _outputs(raw)
+        try:
+            gates = []
+            for name, out, expectations, partition_by in sinks:
+                written = out
+                if fail_fast:
+                    written, obs = observed(out, expectations, name)
+                    gates.append((obs, out, expectations))
+                write_parquet(
+                    written, hpath(stage, name).toString(),
+                    partition_by=partition_by,
+                )
+            for obs, out, expectations in gates:
+                validation.update(
+                    assert_observation(obs, out, expectations)
+                )
+            fs.mkdirs(dest)
+            for name, *_ in sinks:
+                target = hpath(dest, name)
+                fs.delete(target, True)
+                if not fs.rename(hpath(stage, name), target):
+                    raise OSError(f"could not publish {name} to {target}")
+        finally:
+            fs.delete(stage, True)
 
     return WeatherPipelineResult(
         daily=daily_out, monthly=monthly_out, validation=validation

@@ -253,15 +253,14 @@ def _ann_recall_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift between this sliced plan and the operator's own semantics
     hash-mismatches the driver row.
     """
-    from pyspark.sql import Window
-
     from ..operators.caching import persisted
     from ..operators.similarity import (
-        SIM_DECIMALS,
         _as_double,
         _banded_ids,
         _multi_table_planes,
-        dot,
+        _rank_topk,
+        _score,
+        _side,
         norm,
     )
 
@@ -280,22 +279,9 @@ def _ann_recall_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_topk(queries, emb, k=_K).select("query_id", "neighbor_id")
     )
     q_side = F.broadcast(
-        vecs.filter(F.col("id") < _RECALL_QUERIES).select(
-            F.col("id").alias("query_id"), F.col("v").alias("qv"),
-            F.col("n").alias("qn"),
-        )
+        _side(vecs.filter(F.col("id") < _RECALL_QUERIES), "query")
     )
-    c_side = vecs.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("n").alias("cn"),
-    )
-    sim = F.round(
-        dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        SIM_DECIMALS,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
+    c_side = _side(vecs, "neighbor")
     out: DataFrame | None = None
     for n_tables in (1, 4, 8):
         bq = F.broadcast(
@@ -313,14 +299,10 @@ def _ann_recall_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "neighbor_id")
             .dropDuplicates(["query_id", "neighbor_id"])
         )
-        ann = (
-            cand.join(q_side, "query_id")
-            .join(c_side, "neighbor_id")
-            .select("query_id", "neighbor_id", sim.alias("sim"))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= _K)
-            .select("query_id", "neighbor_id")
-        )
+        ann = _rank_topk(
+            _score(cand.join(q_side, "query_id").join(c_side, "neighbor_id")),
+            _K,
+        ).select("query_id", "neighbor_id")
         hits = exact.join(ann, ["query_id", "neighbor_id"], "left_semi")
         row = (
             exact.agg(F.count(F.lit(1)).alias("n_exact"))
@@ -542,16 +524,15 @@ _IVF_CELLS = 16
 
 
 def _ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from ..operators.caching import persisted
     from ..operators.similarity import (
-        SIM_DECIMALS,
         _as_double,
         _centroid_argmax,
         _probe_cells,
+        _rank_topk,
+        _score,
+        _side,
         _with_constant_row,
-        dot,
         lsh_hyperplanes,
         norm,
     )
@@ -583,23 +564,10 @@ def _ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_topk(queries, emb, k=_K).select("query_id", "neighbor_id")
     )
     q_side = F.broadcast(
-        vecs.filter(F.col("id") < _RECALL_QUERIES).select(
-            F.col("id").alias("query_id"), F.col("v").alias("qv"),
-            F.col("n").alias("qn"),
-        )
+        _side(vecs.filter(F.col("id") < _RECALL_QUERIES), "query")
     )
-    c_side = vecs.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("n").alias("cn"),
-    )
+    c_side = _side(vecs, "neighbor")
     corpus_cells = vecs.select(F.col("id").alias("neighbor_id"), "cell")
-    sim = F.round(
-        dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        SIM_DECIMALS,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
     out: DataFrame | None = None
     for p in _IVF_PROBES:
         q_probe = F.broadcast(
@@ -613,14 +581,10 @@ def _ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .select("query_id", "neighbor_id")
         )
-        ann = (
-            cand.join(q_side, "query_id")
-            .join(c_side, "neighbor_id")
-            .select("query_id", "neighbor_id", sim.alias("sim"))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= _K)
-            .select("query_id", "neighbor_id")
-        )
+        ann = _rank_topk(
+            _score(cand.join(q_side, "query_id").join(c_side, "neighbor_id")),
+            _K,
+        ).select("query_id", "neighbor_id")
         row = _recall_row(exact, ann, {"n_probe": p}, cand=cand)
         out = row if out is None else out.unionAll(row)
     return out
@@ -709,16 +673,15 @@ def _sc_snapped_cells(n_vectors: int) -> int:
 
 
 def _scaled_cells_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from ..operators.caching import persisted
     from ..operators.similarity import (
-        SIM_DECIMALS,
         _as_double,
         _centroid_argmax,
         _probe_cells,
+        _rank_topk,
+        _score,
+        _side,
         _with_constant_row,
-        dot,
         lsh_hyperplanes,
         norm,
     )
@@ -769,30 +732,12 @@ def _scaled_cells_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "neighbor_id")
         )
         q_side = F.broadcast(
-            vecs.filter(F.col("id") < _RECALL_QUERIES).select(
-                F.col("id").alias("query_id"), F.col("v").alias("qv"),
-                F.col("n").alias("qn"),
-            )
+            _side(vecs.filter(F.col("id") < _RECALL_QUERIES), "query")
         )
-        c_side = vecs.select(
-            F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-            F.col("n").alias("cn"),
+        pairs = cand.join(q_side, "query_id").join(
+            _side(vecs, "neighbor"), "neighbor_id"
         )
-        sim = F.round(
-            dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-            SIM_DECIMALS,
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("sim").desc(), F.col("neighbor_id").asc()
-        )
-        ann = (
-            cand.join(q_side, "query_id")
-            .join(c_side, "neighbor_id")
-            .select("query_id", "neighbor_id", sim.alias("sim"))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= _K)
-            .select("query_id", "neighbor_id")
-        )
+        ann = _rank_topk(_score(pairs), _K).select("query_id", "neighbor_id")
         row = _recall_row(
             exact, ann,
             {"arm": arm, "n_cells": cells, "n_probe": probes},
@@ -897,10 +842,8 @@ register(QuerySpec(
 
 
 def _pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from ..operators.caching import persisted
-    from ..operators.similarity import ivf_pq_topk
+    from ..operators.similarity import _rank_topk, ivf_pq_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _RECALL_QUERIES)
@@ -920,16 +863,10 @@ def _pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             with_shortlist_rank=True,
         ).filter(F.col("query_id") < _RECALL_QUERIES)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
     out: DataFrame | None = None
     for rr in _PQ_RERANKS:
-        ann = (
-            full.filter(F.col("srk") <= rr)
-            .withColumn("rk2", F.row_number().over(w))
-            .filter(F.col("rk2") <= _K)
-            .select("query_id", "neighbor_id")
+        ann = _rank_topk(full.filter(F.col("srk") <= rr), _K).select(
+            "query_id", "neighbor_id"
         )
         row = _recall_row(exact, ann, {"rerank": rr})
         out = row if out is None else out.unionAll(row)
@@ -1018,11 +955,9 @@ register(QuerySpec(
 # trained partition next to the seeded curves.
 
 def _trained_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from ..operators.caching import persisted
     from ..operators.cluster import kmeans_assignments
-    from ..operators.similarity import SIM_DECIMALS, dot, norm
+    from ..operators.similarity import _rank_topk, _score, _side, norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _RECALL_QUERIES)
@@ -1033,31 +968,14 @@ def _trained_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_assignments(emb, k=_KM_K, iters=_KM_ITERS)
         .withColumn("n", norm(F.col("v")))
     )
-    a = assigned.filter(F.col("id") < _RECALL_QUERIES).select(
-        F.col("id").alias("query_id"), F.col("v").alias("qv"),
-        F.col("n").alias("qn"), "cluster",
-    )
-    b = assigned.select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.col("n").alias("cn"), "cluster",
+    a = _side(
+        assigned.filter(F.col("id") < _RECALL_QUERIES), "query", "cluster"
     )
     cand = persisted(
-        a.join(b, "cluster")
+        a.join(_side(assigned, "neighbor", "cluster"), "cluster")
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    sim = F.round(
-        dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-        SIM_DECIMALS,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    ann = (
-        cand.select("query_id", "neighbor_id", sim.alias("sim"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _K)
-        .select("query_id", "neighbor_id")
-    )
+    ann = _rank_topk(_score(cand), _K).select("query_id", "neighbor_id")
     return _recall_row(exact, ann, cand=cand)
 
 

@@ -831,29 +831,30 @@ class TestMultiTableANN:
     SF = "/root/testdata/sf0.001"
 
     def test_single_table_config_reproduces_lsh_topk(self, spark):
-        """lsh_topk_multi(n_tables=1) must equal the single-table
-        lsh_topk exactly (same seed -> same plane family -> same
-        buckets -> same candidates -> same rescore/tie-break)."""
+        """lsh_topk_multi(n_tables=1) -- which lsh_topk calls -- must
+        equal the single-table twin lsh_topk_sql exactly (same seed ->
+        same plane family -> same buckets -> same candidates -> same
+        rescore/tie-break)."""
         from etl_on_weather_dataset_spark.operators.caching import (
             release_all,
         )
         from etl_on_weather_dataset_spark.operators.similarity import (
+            lsh_hyperplanes,
             lsh_topk,
             lsh_topk_multi,
+            lsh_topk_sql,
         )
         from etl_on_weather_dataset_spark.schemas import load_table
 
+        from .oracle_harness import compare
+
         emb = load_table(spark, self.SF, "embeddings")
+        oracle = lsh_topk_sql(lsh_hyperplanes(64, 8, 42), k=5)
         try:
-            single = {
-                tuple(r)
-                for r in lsh_topk(emb, k=5).collect()
-            }
-            multi = {
-                tuple(r)
-                for r in lsh_topk_multi(emb, emb, k=5, n_tables=1).collect()
-            }
-            assert multi == single and len(multi) > 0
+            multi = lsh_topk_multi(emb, emb, k=5, n_tables=1)
+            compare(multi, oracle, self.SF, name="lsh_topk_multi_t1")
+            single = {tuple(r) for r in lsh_topk(emb, k=5).collect()}
+            assert single == {tuple(r) for r in multi.collect()} and single
         finally:
             release_all()
 
@@ -1720,9 +1721,9 @@ class TestIvfPq:
         )
         from etl_on_weather_dataset_spark.schemas import load_table
 
+        from .conftest import SF_SMOKE as sf
         from .oracle_harness import compare
 
-        sf = "/root/testdata/sf0.001"
         emb = load_table(spark, sf, "embeddings")
         try:
             compare(
@@ -1733,6 +1734,36 @@ class TestIvfPq:
             )
         finally:
             release_all()
+
+
+def test_one_topk_ranker():
+    """AST scan: the package writes the per-query ranking window
+    (``Window.partitionBy("query_id")``) exactly once, inside
+    ``similarity._rank_topk``; every top-k operator and recall curve
+    ranks through it."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    pkg = repo / "etl_on_weather_dataset_spark"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef):
+                for n in ast.walk(fn):
+                    owner.setdefault(id(n), fn.name)
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "partitionBy"
+                    and [getattr(a, "value", None) for a in node.args]
+                    == ["query_id"]):
+                found.append(
+                    (path.relative_to(pkg).as_posix(), owner.get(id(node)))
+                )
+    assert found == [("operators/similarity.py", "_rank_topk")], found
 
 
 class TestKmeans:

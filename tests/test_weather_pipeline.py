@@ -102,6 +102,25 @@ def test_clean_run_job_budget(spark, fixture_paths, tmp_path):
     assert 0 < len(jobs) <= 12, f"{len(jobs)} Spark jobs"
 
 
+def test_run_without_output_dir_releases_with_release_all(spark, tmp_path):
+    """Without ``output_dir`` the cached fact table backs the returned
+    frames; it sits on the caching ledger, so ``release_all()`` frees
+    it. A CSV of its own keeps an identical plan cached by another
+    test from hiding a leak."""
+    from etl_on_weather_dataset_spark.operators import caching
+
+    csv = str(write_fixture(tmp_path / "own.csv", dirty=False))
+    jsc = spark.sparkContext._jsc.sc()
+    caching.release_all()
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        res = pipeline.run(spark, csv, output_dir=None)
+        assert res.monthly.count() == 4
+    assert jsc.getPersistentRDDs().size() > before
+    assert caching.release_all() >= 1
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_monthly_golden_against_duckdb(spark, fixture_paths):
     """Monthly means + deterministic precip mode vs a DuckDB oracle
     computing the same semantics from the raw CSV."""
